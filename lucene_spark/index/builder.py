@@ -1,10 +1,12 @@
 """Distributed inverted-index builder — the Spark-first reimagining of
 Lucene's IndexWriter flush/merge pipeline (SURVEY.md §2.A, §3.1).
 
-Dataflow (two shuffles total, mirroring DWPT-flush + merge):
+Dataflow (two shuffles of documents or postings, mirroring DWPT-flush +
+merge; the terms aggregate shuffles only one header row per run):
 
   docs(repo,path,commit,lang,content)
-    -> repartitionByRange(repo,path,commit) + sortWithinPartitions   [shuffle 1: doc -> segment]
+    -> range placement on (repo,path,commit) + sortWithinPartitions
+                                               [shuffle 1: doc -> segment]
     -> mapInPandas invert+flush: docID assignment (global sort rank),
        tokenize (StandardAnalyzer chain), per-doc tf/positions,
        dl/norm/sha256, then a MAP-SIDE SEGMENT FLUSH: per-partition
@@ -16,13 +18,16 @@ Dataflow (two shuffles total, mirroring DWPT-flush + merge):
                                                 16MB RAM trigger IndexWriterConfig.java:83)
     -> docmap table (meta rows)                (segment docIDs + .nvd norms)
     -> groupBy(term).agg over run headers -> terms table (df/cf + impact bounds)
-    -> groupBy(term, salt).applyInPandas merge runs -> 256-doc blocks
+    -> merge_postings: runs placed by term range, sortWithinPartitions
+       (term, salt, first_doc), one stateful mapInPandas kernel streams
+       each partition and carves 256-doc blocks per (term, salt) group
                                                [shuffle 2: segment -> term]
        (SegmentMerger's k-way merge, index/SegmentMerger.java:114-151 —
         runs hold disjoint, ascending docID ranges, so the merge is pure
         concatenation in first_doc order: no re-sort, no docBase remap;
         block encode = Lucene104PostingsWriter.java:237-359)
-    -> postings table, range-partitioned+sorted by term (parquet min/max
+    -> postings table, written straight from the merge: partition r holds
+       term range r in (term, salt, block_seq) order (parquet min/max
        stats replace the block-tree term dictionary)
     -> stats table (IndexSearcher.collectionStatistics analog,
        search/IndexSearcher.java:1134-1148)
@@ -40,7 +45,9 @@ Scale design notes (100 TB / 1000 executors):
     `hot_df_threshold` are salted by run doc-range (`salt = first_doc //
     hot_salt_span`); salt spans are disjoint doc ranges so the global
     posting list is the concatenation of per-salt block runs — no
-    re-merge needed (SURVEY.md §4.2 "Hot-term skew").
+    re-merge needed (SURVEY.md §4.2 "Hot-term skew"). The merge kernel
+    carries at most one salted group across Arrow batches, so salting
+    bounds what it buffers.
   - Per-partition memory is bounded by `flush_docs` (RAM-buffer analog):
     a partition emits multiple independent runs, merged for free later.
   - Norm bytes are embedded per posting (1 B/doc, like .nvd inlined) so
@@ -75,17 +82,15 @@ from pyspark.sql.types import (
 from lucene_spark.analysis import analyze
 from lucene_spark.analysis.fastpath import tokenize_window_ascii
 from lucene_spark.analysis.standard import analyze_with_offsets
-from lucene_spark.util.blockcodec import CODEC_NAME
-from lucene_spark.util.blockcodec import decode_block as decode
+from lucene_spark.util.blockcodec import (
+    CODEC_NAME,
+    decode_blocks,
+    encode_blocks,
+)
 from lucene_spark.util.blockcodec import encode_block as encode
 from lucene_spark.util.metaio import write_meta_parquet
 from lucene_spark.util.smallfloat import int_to_byte4
-from lucene_spark.util.varbyte import (
-    delta_decode,
-    delta_encode,
-    segmented_delta_decode,
-    segmented_delta_encode,
-)
+from lucene_spark.util.varbyte import delta_encode, segmented_delta_encode
 
 BLOCK_SIZE = 256  # Lucene104PostingsFormat ForUtil.BLOCK_SIZE (ForUtil.java:34)
 # Per-partition run size bound (DWPT RAM-buffer analog). 16k docs, NOT
@@ -155,6 +160,7 @@ BLOCK_SCHEMA = StructType(
         StructField("pay_vb", BinaryType()),
     ]
 )
+_BLOCK_COLS = [f.name for f in BLOCK_SCHEMA.fields]
 
 _RUN_COLS = [
     "term", "first_doc", "ndocs", "cf", "max_tf", "min_norm",
@@ -856,117 +862,165 @@ def _invert_partition(
     return fn
 
 
-def _merge_runs_to_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel for one (term, salt) group: concatenate the
-    group's posting runs in first_doc order (runs hold disjoint ascending
-    docID ranges -> already globally sorted) and emit <=256-doc varbyte
-    blocks with impact metadata."""
-    term, salt = key
-    pdf = pdf.sort_values("first_doc")
-    doc_parts, tf_parts, norm_parts, pos_parts = [], [], [], []
-    off_parts, olen_parts, pay_parts = [], [], []
-    has_pos = False
-    has_offs = False
-    has_pays = False
-    for r in pdf.itertuples():
-        d = delta_decode(decode(bytes(r.docs_vb)))
-        t = decode(bytes(r.tfs_vb))
-        doc_parts.append(d)
-        tf_parts.append(t)
-        norm_parts.append(np.frombuffer(bytes(r.norms_b), dtype=np.uint8))
-        if r.pos_vb:
-            has_pos = True
-            pos_parts.append(segmented_delta_decode(decode(bytes(r.pos_vb)), t))
-        # offs_vb/olen_vb absent on runs written before the offsets option
-        if getattr(r, "offs_vb", b""):
-            has_offs = True
-            off_parts.append(
-                segmented_delta_decode(decode(bytes(r.offs_vb)), t)
-            )
-            olen_parts.append(decode(bytes(r.olen_vb)))
-        # pay_vb absent on runs written before the payloads option
-        if getattr(r, "pay_vb", b""):
-            has_pays = True
-            pay_parts.append(decode(bytes(r.pay_vb)))
-    # Mixed-payload guard: occ_ends indexes the FULL run concatenation,
-    # so if only SOME runs carry positions/offsets the flat arrays are
-    # silently misaligned against it. write_segment pins the index-wide
-    # options (index_options.json) so this can only mean corruption or a
+# Columns the postings merge reads, in kernel order: salted runs, or
+# postings blocks re-read as runs (compaction: first_doc = min_doc).
+MERGE_COLS = [
+    "term", "salt", "first_doc", "docs_vb", "tfs_vb", "norms_b",
+    "pos_vb", "offs_vb", "olen_vb", "pay_vb",
+]
+# occurrence payloads: (column, delta-coded per posting, name in errors)
+_OCC_PAYLOADS = (
+    ("pos_vb", True, "positions"),
+    ("offs_vb", True, "offsets"),
+    ("olen_vb", False, None),
+    ("pay_vb", False, "payloads"),
+)
+
+
+def _runs_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Prefix sums restarted at every segment of ``gaps`` (segment i holds
+    counts[i] values, its first gap absolute): the vectorized inverse of
+    per-segment delta coding over many segments at once."""
+    cs = np.cumsum(gaps, dtype=np.int64)
+    before = np.concatenate(([0], cs))[np.cumsum(counts) - counts]
+    return cs - np.repeat(before, counts)
+
+
+def _merge_groups(cols: list[np.ndarray], starts: np.ndarray) -> pd.DataFrame:
+    """Merge complete (term, salt) groups into 256-doc postings blocks.
+
+    ``cols`` holds MERGE_COLS of consecutive rows; group g is rows
+    [starts[g], starts[g+1]). Runs of one group hold disjoint docID
+    ranges, so the group's postings are its runs concatenated in
+    first_doc order (SegmentMerger's merge with no re-sort; block encode
+    = Lucene104PostingsWriter.java:237-359). Every payload column of the
+    batch decodes in one vectorized pass; block impact bounds come from
+    reduceat over the block starts; only the block payload encodes are
+    per block."""
+    n = cols[0].size
+    sizes = np.diff(np.append(starts, n))
+    gid = np.repeat(np.arange(starts.size), sizes)
+    first = cols[2]
+    if np.any((first[1:] < first[:-1]) & (gid[1:] == gid[:-1])):
+        order = np.lexsort((first, gid))
+        cols = [c[order] for c in cols]
+    term, salt, _, docs_vb, tfs_vb, norms_b = cols[:6]
+
+    gaps, run_ndocs = decode_blocks(docs_vb)
+    docs = _runs_cumsum(gaps, run_ndocs)
+    tfs, _ = decode_blocks(tfs_vb)
+    norms = np.frombuffer(b"".join(norms_b), dtype=np.uint8)
+    run_post = np.concatenate(([0], np.cumsum(run_ndocs)))
+    occ = np.concatenate(([0], np.cumsum(tfs)))
+
+    # occurrence payloads, laid out on the global occurrence index. The
+    # mixed guard: the flat arrays are cut by occurrence offsets of ALL
+    # runs, so a group where only SOME runs carry a payload would be
+    # silently misaligned. write_segment pins the index-wide options
+    # (index_options.json), so this can only mean corruption or a
     # hand-mixed layout — fail loudly rather than emit garbage payloads.
-    if has_pos and len(pos_parts) != len(pdf):
-        raise ValueError(
-            f"term {term!r}: {len(pos_parts)}/{len(pdf)} runs carry "
-            "positions — segments were written with mixed store_positions"
-        )
-    if has_offs and len(off_parts) != len(pdf):
-        raise ValueError(
-            f"term {term!r}: {len(off_parts)}/{len(pdf)} runs carry "
-            "offsets — segments were written with mixed store_offsets"
-        )
-    if has_pays and len(pay_parts) != len(pdf):
-        raise ValueError(
-            f"term {term!r}: {len(pay_parts)}/{len(pdf)} runs carry "
-            "payloads — segments were written with mixed store_payloads"
-        )
-    doc_ids = np.concatenate(doc_parts)
-    tfs = np.concatenate(tf_parts)
-    norms = np.concatenate(norm_parts)
-    occ_ends = np.cumsum(tfs)  # per-posting occurrence boundaries
-    if has_pos:
-        pos_flat = np.concatenate(pos_parts)
-    if has_offs:
-        off_flat = np.concatenate(off_parts)
-        olen_flat = np.concatenate(olen_parts)
-    if has_pays:
-        pay_flat = np.concatenate(pay_parts)
-    rows = []
-    for b, start in enumerate(range(0, len(doc_ids), BLOCK_SIZE)):
-        end = min(start + BLOCK_SIZE, len(doc_ids))
-        d = doc_ids[start:end]
-        t = tfs[start:end]
-        nb = norms[start:end]
-        o0 = occ_ends[start - 1] if start else 0
-        o1 = occ_ends[end - 1]
-        if has_pos:
-            pos_vb = encode(segmented_delta_encode(pos_flat[o0:o1], t))
-        else:
-            pos_vb = b""
-        if has_offs:
-            offs_vb = encode(segmented_delta_encode(off_flat[o0:o1], t))
-            olen_vb = encode(olen_flat[o0:o1])
-        else:
-            offs_vb, olen_vb = b"", b""
-        pay_vb = encode(pay_flat[o0:o1]) if has_pays else b""
-        rows.append(
-            (
-                term,
-                int(salt),
-                b,
-                int(d.size),
-                int(d[0]),
-                int(d[-1]),
-                int(t.max()),
-                int(nb.min()),
-                int(t.min()),
-                int(nb.max()),
-                encode(delta_encode(d)),
-                encode(t),
-                nb.astype(np.uint8).tobytes(),
-                pos_vb,
-                offs_vb,
-                olen_vb,
-                pay_vb,
+    occ_vals: dict[str, np.ndarray] = {}
+    occ_has: dict[str, np.ndarray] = {}
+    for ci, (col, delta, label) in enumerate(_OCC_PAYLOADS, start=6):
+        vb = cols[ci]
+        present = np.fromiter(map(bool, vb), dtype=bool, count=n)
+        if not present.any():
+            continue
+        carried = np.add.reduceat(present.astype(np.int64), starts)
+        mixed = np.flatnonzero((carried > 0) & (carried != sizes))
+        if label is not None and mixed.size:
+            g = int(mixed[0])
+            raise ValueError(
+                f"term {term[starts[g]]!r}: {carried[g]}/{sizes[g]} runs "
+                f"carry {label} — segments were written with mixed "
+                f"store_{label}"
             )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "term", "salt", "block_seq", "ndocs", "min_doc", "max_doc",
-            "max_tf", "min_norm", "min_tf", "max_norm",
-            "docs_vb", "tfs_vb", "norms_b", "pos_vb", "offs_vb", "olen_vb",
-            "pay_vb",
-        ],
-    )
+        post_mask = np.repeat(present, run_ndocs)
+        vals, _ = decode_blocks(vb[present])
+        if delta:
+            vals = _runs_cumsum(vals, tfs[post_mask])
+        if not present.all():
+            full = np.zeros(int(occ[-1]), dtype=np.int64)
+            full[np.repeat(post_mask, tfs)] = vals
+            vals = full
+        occ_vals[col] = vals
+        occ_has[col] = carried > 0
+
+    # block layout: each group's postings cut every BLOCK_SIZE docs
+    g_post0 = run_post[starts]
+    g_npost = run_post[np.append(starts[1:], n)] - g_post0
+    nblk = (g_npost + BLOCK_SIZE - 1) // BLOCK_SIZE
+    blk_g = np.repeat(np.arange(starts.size), nblk)
+    seq = np.arange(blk_g.size) - np.repeat(np.cumsum(nblk) - nblk, nblk)
+    bstart = g_post0[blk_g] + seq * BLOCK_SIZE
+    bend = np.minimum(bstart + BLOCK_SIZE, (g_post0 + g_npost)[blk_g])
+    bn = bend - bstart
+    out = {
+        "term": term[starts][blk_g],
+        "salt": salt[starts][blk_g].astype(np.int64),
+        "block_seq": seq.astype(np.int64),
+        "ndocs": bn.astype(np.int32),
+        "min_doc": docs[bstart],
+        "max_doc": docs[bend - 1],
+    }
+    if blk_g.size:
+        out["max_tf"] = np.maximum.reduceat(tfs, bstart).astype(np.int32)
+        out["min_norm"] = np.minimum.reduceat(norms, bstart).astype(np.int32)
+        out["min_tf"] = np.minimum.reduceat(tfs, bstart).astype(np.int32)
+        out["max_norm"] = np.maximum.reduceat(norms, bstart).astype(np.int32)
+    else:
+        for c in ("max_tf", "min_norm", "min_tf", "max_norm"):
+            out[c] = np.empty(0, dtype=np.int32)
+    # blocks tile the batch's postings, so their payloads encode in one
+    # batched call per column
+    out["docs_vb"] = encode_blocks(segmented_delta_encode(docs, bn), bn)
+    out["tfs_vb"] = encode_blocks(tfs, bn)
+    norm_bytes = norms.tobytes()
+    out["norms_b"] = [
+        norm_bytes[a:b] for a, b in zip(bstart.tolist(), bend.tolist())
+    ]
+    bocc = occ[bend] - occ[bstart]
+    for col, delta, _ in _OCC_PAYLOADS:
+        if col not in occ_vals:
+            out[col] = [b""] * blk_g.size
+            continue
+        vals = occ_vals[col]
+        if delta:
+            vals = segmented_delta_encode(vals, tfs)
+        enc = encode_blocks(vals, bocc)
+        has = occ_has[col][blk_g]
+        out[col] = [e if h else b"" for e, h in zip(enc, has.tolist())]
+    return pd.DataFrame(out, columns=_BLOCK_COLS)
+
+
+def _merge_postings_kernel(batches):
+    """mapInPandas kernel of ``merge_postings``. Rows arrive sorted by
+    (term, salt, first_doc), so each (term, salt) group is a run of
+    consecutive rows that may straddle Arrow batches. Group breaks are
+    found with numpy; every complete group of a batch is merged in one
+    ``_merge_groups`` call, and only the trailing group is carried into
+    the next batch — memory stays bounded by one Arrow batch (decoded
+    into a small multiple of its encoded bytes) plus one carried salted
+    group. Output comes out in (term, salt, block_seq) order."""
+    carry: list[np.ndarray] | None = None
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        cols = [pdf[c].to_numpy() for c in MERGE_COLS]
+        if carry is not None:
+            cols = [np.concatenate((a, b)) for a, b in zip(carry, cols)]
+        term, salt = cols[0], cols[1]
+        breaks = np.flatnonzero(
+            (term[1:] != term[:-1]) | (salt[1:] != salt[:-1])
+        ) + 1
+        tail = int(breaks[-1]) if breaks.size else 0
+        carry = [c[tail:] for c in cols]
+        if tail:
+            yield _merge_groups(
+                [c[:tail] for c in cols], np.concatenate(([0], breaks[:-1]))
+            )
+    if carry is not None:
+        yield _merge_groups(carry, np.zeros(1, dtype=np.int64))
 
 
 TOPK_LB = 10  # k for the build-time theta floor stored per term
@@ -994,6 +1048,36 @@ def _salt_runs(
             ).otherwise(F.lit(0).cast("long")),
         )
         .drop("is_hot")
+    )
+
+
+def merge_postings(
+    spark: SparkSession,
+    runs: DataFrame,
+    term_bounds: list[str] | None = None,
+    n_part: int | None = None,
+) -> DataFrame:
+    """Merge salted posting runs (MERGE_COLS) into postings blocks
+    (BLOCK_SCHEMA) in ONE shuffle: place runs by term, sort each
+    partition by (term, salt, first_doc), and stream the sorted rows
+    through one stateful mapInPandas kernel (``_merge_postings_kernel``)
+    that carves blocks group by group with no per-group Python call.
+    The output is already in (term, salt, block_seq) order.
+
+    With ``term_bounds`` (sorted split terms) runs land by exact term
+    range, range r on partition r % n_part, so each postings file holds
+    one contiguous term range — parquet min/max stats then serve as the
+    term dictionary. Without them runs hash-place by term and AQE
+    coalesces the small partitions (refresh and compaction output)."""
+    runs = runs.select(*MERGE_COLS)
+    if term_bounds is None:
+        placed = runs.repartition("term")
+    else:
+        placed = _repartition_exact(
+            spark, _with_range_id(runs, term_bounds, ["term"]), n_part
+        ).drop("rpid")
+    return placed.sortWithinPartitions("term", "salt", "first_doc").mapInPandas(
+        _merge_postings_kernel, schema=BLOCK_SCHEMA
     )
 
 
@@ -1377,13 +1461,8 @@ def build_index(
     _mark("terms_agg", _t)
 
     # --- shuffle 2: merge runs into postings blocks (salted hot terms) ---
-    salted = _salt_runs(runs, hot_df, n_hot_terms, hot_salt_span)
-    blocks = salted.groupBy("term", "salt").applyInPandas(
-        _merge_runs_to_blocks, schema=BLOCK_SCHEMA
-    )
-    # range-partition the output by term (the parquet file/rowgroup min-max
-    # stats ARE our term dictionary) — boundaries come from the cached
-    # terms table, so the expensive merge runs exactly once
+    # runs land by term range (the parquet file/rowgroup min-max stats ARE
+    # our term dictionary) — boundaries come from the cached terms table.
     # count-bounded vocabulary sample (distinct_terms is already known):
     # 0.2 of a web-scale vocabulary would collect 10^9+ terms driverside
     term_frac = min(0.2, KEY_SAMPLE_MAX / max(1.0, float(stats["distinct_terms"])))
@@ -1396,15 +1475,12 @@ def build_index(
         ),
         n_part,
     )
-    (
-        _repartition_exact(
-            spark, _with_range_id(blocks, term_bounds, ["term"]), n_part
-        )
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .drop("rpid")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings"))
-    )
+    merge_postings(
+        spark,
+        _salt_runs(runs, hot_df, n_hot_terms, hot_salt_span),
+        term_bounds,
+        n_part,
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
     _mark("postings_write", _t)
 
     # --- terms table: run-header aggregates + block-derived lb_key10 -----

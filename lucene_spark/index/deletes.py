@@ -31,16 +31,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.builder import (
-    BLOCK_SCHEMA,
-    BLOCK_SIZE,
-    _merge_runs_to_blocks,
-)
+from lucene_spark.index.builder import BLOCK_SCHEMA, _runs_cumsum
 from lucene_spark.util.blockcodec import decode_block as decode
+from lucene_spark.util.blockcodec import decode_blocks
 from lucene_spark.util.blockcodec import encode_block as encode
 from lucene_spark.util.blockcodec import validate_manifest_codec
 from lucene_spark.util.varbyte import (
-    delta_decode,
     delta_encode,
     segmented_delta_decode,
     segmented_delta_encode,
@@ -125,6 +121,61 @@ def publish_tombstones(index_dir: str, staging_path: str) -> None:
     os.replace(staging_path, os.path.join(d, os.path.basename(staging_path)))
 
 
+def _seg_keep(payload_vb, t, t2, keep, delta: bool) -> bytes:
+    """Re-segment one occurrence payload (positions, offset starts or
+    lengths, payloads) keeping only surviving docs' tf segments."""
+    raw = decode(payload_vb)
+    flat = segmented_delta_decode(raw, t) if delta else raw
+    ends = np.cumsum(t)
+    parts = [flat[(ends[i] - t[i]):ends[i]] for i in np.flatnonzero(keep)]
+    flat2 = np.concatenate(parts) if parts else np.empty(0, np.int64)
+    return encode(segmented_delta_encode(flat2, t2) if delta else flat2)
+
+
+def drop_deleted_docs(pdf: pd.DataFrame, deleted: np.ndarray) -> pd.DataFrame:
+    """The tombstone filter for postings rows — blocks or runs alike:
+    drop the docIDs in ``deleted`` (sorted) from every row (SegmentMerger
+    applies liveDocs during merge, reference lucene/core/src/java/org/
+    apache/lucene/index/SegmentMerger.java:114-151). The batch's docIDs
+    decode in one vectorized pass; rows that lose no doc pass through
+    untouched, rows that lose every doc vanish, and only the rest are
+    re-encoded, with whichever header columns the row has recomputed.
+    Each row is filtered on its own, so rows with disjoint ascending doc
+    ranges stay disjoint and ascending."""
+    gaps, counts = decode_blocks(pdf["docs_vb"].to_numpy())
+    docs = _runs_cumsum(gaps, counts)
+    hit = np.isin(docs, deleted)
+    bnd = np.concatenate(([0], np.cumsum(counts)))
+    hits_before = np.concatenate(([0], np.cumsum(hit)))
+    n_hit = hits_before[bnd[1:]] - hits_before[bnd[:-1]]
+    out = {c: pdf[c].to_numpy().copy() for c in pdf.columns}
+    for i in np.flatnonzero((n_hit > 0) & (n_hit < counts)):
+        keep = ~hit[bnd[i]:bnd[i + 1]]
+        d2 = docs[bnd[i]:bnd[i + 1]][keep]
+        t = decode(out["tfs_vb"][i])
+        nb2 = np.frombuffer(out["norms_b"][i], dtype=np.uint8)[keep]
+        t2 = t[keep]
+        for c, delta in (
+            ("pos_vb", True), ("offs_vb", True),
+            ("olen_vb", False), ("pay_vb", False),
+        ):
+            if c in out and out[c][i]:
+                out[c][i] = _seg_keep(out[c][i], t, t2, keep, delta)
+        out["docs_vb"][i] = encode(delta_encode(d2))
+        out["tfs_vb"][i] = encode(t2)
+        out["norms_b"][i] = nb2.tobytes()
+        header = {
+            "first_doc": d2[0], "ndocs": d2.size, "min_doc": d2[0],
+            "max_doc": d2[-1], "max_tf": t2.max(), "min_norm": nb2.min(),
+            "min_tf": t2.min(), "max_norm": nb2.max(),
+        }
+        for c, v in header.items():
+            if c in out:  # runs carry first_doc, blocks the rest
+                out[c][i] = v
+    live = n_hit < counts
+    return pd.DataFrame({c: v[live] for c, v in out.items()})
+
+
 def expunge_deletes(spark: SparkSession, index_dir: str) -> dict:
     """Rewrite the index without tombstoned docs and republish the
     manifest (forceMergeDeletes analog). No-op when nothing is deleted."""
@@ -146,64 +197,25 @@ def expunge_deletes(spark: SparkSession, index_dir: str) -> dict:
     t0 = time.time()
     del_b = spark.sparkContext.broadcast(deleted)
 
-    def _seg_keep(payload_vb, t, t2, keep, delta: bool):
-        raw = decode(bytes(payload_vb))
-        flat = segmented_delta_decode(raw, t) if delta else raw
-        ends = np.cumsum(t)
-        parts = [flat[(ends[i] - t[i]): ends[i]] for i in np.flatnonzero(keep)]
-        flat2 = np.concatenate(parts) if parts else np.empty(0, np.int64)
-        return encode(segmented_delta_encode(flat2, t2) if delta else flat2)
-
-    def filter_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        dele = del_b.value
-        rows = []
-        term, salt = key
-        for r in pdf.sort_values("block_seq").itertuples():
-            # offs/pay columns absent on indexes built before those options
-            offs_vb0 = bytes(getattr(r, "offs_vb", b"") or b"")
-            olen_vb0 = bytes(getattr(r, "olen_vb", b"") or b"")
-            pay_vb0 = bytes(getattr(r, "pay_vb", b"") or b"")
-            d = delta_decode(decode(bytes(r.docs_vb)))
-            keep = ~np.isin(d, dele)
-            if keep.all():
-                rows.append((term, int(salt), int(r.block_seq), int(r.ndocs),
-                             int(r.min_doc), int(r.max_doc), int(r.max_tf),
-                             int(r.min_norm),
-                             int(getattr(r, "min_tf", 1)),
-                             int(getattr(r, "max_norm", 255)),
-                             bytes(r.docs_vb), bytes(r.tfs_vb),
-                             bytes(r.norms_b), bytes(r.pos_vb),
-                             offs_vb0, olen_vb0, pay_vb0))
-                continue
-            if not keep.any():
-                continue
-            t = decode(bytes(r.tfs_vb))
-            nb = np.frombuffer(bytes(r.norms_b), dtype=np.uint8)
-            d2, t2, nb2 = d[keep], t[keep], nb[keep]
-            pos_vb = (
-                _seg_keep(r.pos_vb, t, t2, keep, delta=True) if r.pos_vb else b""
-            )
-            offs_vb = (
-                _seg_keep(offs_vb0, t, t2, keep, delta=True) if offs_vb0 else b""
-            )
-            olen_vb = (
-                _seg_keep(olen_vb0, t, t2, keep, delta=False) if olen_vb0 else b""
-            )
-            pay_vb = (
-                _seg_keep(pay_vb0, t, t2, keep, delta=False) if pay_vb0 else b""
-            )
-            rows.append((term, int(salt), int(r.block_seq), int(d2.size),
-                         int(d2[0]), int(d2[-1]), int(t2.max()), int(nb2.min()),
-                         int(t2.min()), int(nb2.max()),
-                         encode(delta_encode(d2)), encode(t2),
-                         nb2.tobytes(), pos_vb, offs_vb, olen_vb, pay_vb))
-        return pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
+    def filter_blocks(batches):
+        for pdf in batches:
+            yield drop_deleted_docs(pdf, del_b.value)
 
     postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    # columns absent on indexes built before those options
+    for c, v in (("min_tf", 1), ("max_norm", 255)):
+        if c not in postings.columns:
+            postings = postings.withColumn(c, F.lit(v))
+    for c in ("offs_vb", "olen_vb", "pay_vb"):
+        if c not in postings.columns:
+            postings = postings.withColumn(c, F.lit(b""))
     tmp = os.path.join(index_dir, "postings_expunged")
+    # each block is filtered on its own: no shuffle, and the output keeps
+    # the term-range layout of the postings it reads (the local sort only
+    # restores row order where a scan task packs several files)
     (
-        postings.groupBy("term", "salt")
-        .applyInPandas(filter_blocks, schema=BLOCK_SCHEMA)
+        postings.select(*[f.name for f in BLOCK_SCHEMA.fields])
+        .mapInPandas(filter_blocks, schema=BLOCK_SCHEMA)
         .sortWithinPartitions("term", "salt", "block_seq")
         .write.mode("overwrite").parquet(tmp)
     )

@@ -19,8 +19,8 @@ Spark-first translation:
      metrics (docs, tokens, wall seconds, docs/sec). A killed build
      leaves complete segments' lineage in place — resume skips them and
      rebuilds only the missing ones.
-  3. Merge phase (all segments complete): groupBy(term, salt) over every
-     segment's runs -> terms / postings / stats, then `manifest.json`
+  3. Merge phase (all segments complete): builder.merge_postings over
+     every segment's runs -> terms / postings / stats, then `manifest.json`
      written last = the commit point. Runs hold disjoint ascending docID
      ranges, so the merge is concatenation (SegmentMerger analog).
 
@@ -39,18 +39,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.index.builder import (
-    BLOCK_SCHEMA,
     FLUSH_DOCS,
     INVERT_SCHEMA,
     _invert_partition,
-    _merge_runs_to_blocks,
     _META_COLS,
     _quantile_bounds,
-    _repartition_exact,
     _RUN_COLS,
     _salt_runs,
-    _with_range_id,
     lb10_by_term,
+    merge_postings,
 )
 
 _KEY = ["repo", "path", "commit"]
@@ -256,10 +253,9 @@ def merge_segments(
         "distinct_terms": int(agg["nterms"] or 0),
     }
 
-    # range-place blocks via a driver-side boundary sample from the cached
-    # terms table (repartitionByRange would re-run the whole expensive
-    # merge once more just to sample boundaries — builder.build_index
-    # avoids that the same way)
+    # range-place runs via a driver-side boundary sample from the cached
+    # terms table (repartitionByRange would run a sampling job over the
+    # runs first — builder.build_index avoids that the same way)
     # count-bounded vocabulary sample (builder.KEY_SAMPLE_MAX): 0.2 of a
     # web-scale vocabulary would collect 10^9+ terms driver-side
     from lucene_spark.index.builder import KEY_SAMPLE_MAX
@@ -276,20 +272,12 @@ def merge_segments(
         ),
         n_part,
     )
-    blocks = (
-        _salt_runs(runs, hot_df, n_hot_terms, hot_salt_span)
-        .groupBy("term", "salt")
-        .applyInPandas(_merge_runs_to_blocks, schema=BLOCK_SCHEMA)
-    )
-    (
-        _repartition_exact(
-            spark, _with_range_id(blocks, term_bounds, ["term"]), n_part
-        )
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .drop("rpid")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings"))
-    )
+    merge_postings(
+        spark,
+        _salt_runs(runs, hot_df, n_hot_terms, hot_salt_span),
+        term_bounds,
+        n_part,
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
 
     # terms table last: join in the block-derived lb_key10 threshold floor
     from lucene_spark.search.bm25 import BM25Scorer

@@ -2866,16 +2866,15 @@ class IndexSearcher:
         member terms are disjoint by construction (one token per
         position), so the merge is flatten + sort with no dedup.
 
-        Plan shape: each member decode is the map-only positions kernel;
-        the merge is ONE partial-aggregated groupBy over only the clause
-        terms' postings rows — cost bounded by the clause's summed df,
-        never the corpus."""
+        Plan shape: ONE postings scan of all member terms through the
+        map-only positions kernel, at any expansion width (a union of
+        per-term scans grows the plan with the expansion); the merge is
+        ONE partial-aggregated groupBy over only the clause terms'
+        postings rows — cost bounded by the clause's summed df, never
+        the corpus."""
         if len(clause) == 1:
             return self._positions_side(clause[0])
-        un = self._positions_side(clause[0])
-        for t in clause[1:]:
-            un = un.unionByName(self._positions_side(t))
-        return un.groupBy("docID").agg(
+        return self._positions_side(*clause).groupBy("docID").agg(
             F.first("norm").alias("norm"),
             F.array_sort(F.flatten(F.collect_list("positions"))).alias(
                 "positions"
@@ -2913,11 +2912,12 @@ class IndexSearcher:
                 joined = joined.join(side, "docID")
         return self._strip_deleted(joined)
 
-    def _positions_side(self, term: str) -> DataFrame:
-        """One term's postings decoded to (docID, norm, positions) rows,
-        with the tombstone set applied INSIDE the decode kernel (the
-        decode-kernel liveness contract — every new kernel captures
-        self._deleted_bc and filters before emitting)."""
+    def _positions_side(self, *terms: str) -> DataFrame:
+        """The terms' postings decoded to (docID, norm, positions) rows,
+        one row per (term, doc), with the tombstone set applied INSIDE
+        the decode kernel (the decode-kernel liveness contract — every
+        new kernel captures self._deleted_bc and filters before
+        emitting)."""
         pos_row_schema = StructType(
             [
                 StructField("docID", LongType()),
@@ -2960,7 +2960,7 @@ class IndexSearcher:
                 )
 
         return (
-            self._postings.filter(F.col("term") == term)
+            self._postings.filter(F.col("term").isin(list(terms)))
             .select("docs_vb", "tfs_vb", "norms_b", "pos_vb")
             .mapInPandas(decode_positions, schema=pos_row_schema)
         )

@@ -15,7 +15,11 @@ def get_spark(
     """local[cpus] session tuned for the engine: Arrow enabled (all hot
     UDFs are Arrow-batched), AQE on (skew joins / shuffle coalescing),
     ZSTD parquet. On a real cluster the same confs apply; only master
-    changes (spark-submit provides it)."""
+    changes (spark-submit provides it). ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_GRAFT_DRIVER_MEM`` override the core count (default: the
+    cores this process may run on) and the driver heap (default: 40% of
+    physical RAM — in local mode the executors share the driver JVM, and
+    the Python workers need the rest)."""
     # Make the package importable inside Spark's Python workers regardless
     # of the driver's cwd (local-mode workers inherit the JVM env; on a real
     # cluster spark-submit --py-files serves the same purpose).
@@ -25,7 +29,14 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             repo_root + (os.pathsep + pp if pp else "")
         )
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    driver_mem = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or f"{max(1, int(ram * 0.4) >> 30)}g"
+    )
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "0")
     ) or max(32, cpus)
@@ -39,7 +50,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

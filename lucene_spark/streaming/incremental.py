@@ -34,22 +34,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from lucene_spark.util.blockcodec import decode_block as decode
 from lucene_spark.util.blockcodec import encode_block as encode
-from lucene_spark.util.varbyte import (
-    delta_decode,
-    delta_encode,
-    segmented_delta_decode,
-    segmented_delta_encode,
-)
 
 from lucene_spark.index.builder import (
     BLOCK_SCHEMA,
@@ -57,14 +44,15 @@ from lucene_spark.index.builder import (
     INVERT_SCHEMA,
     _flatten_key,
     _invert_partition,
-    _merge_runs_to_blocks,
     _META_COLS,
     _quantile_bounds,
     _repartition_exact,
     _RUN_COLS,
     _salt_runs,
     _with_range_id,
+    merge_postings,
 )
+from lucene_spark.index.deletes import drop_deleted_docs
 from lucene_spark.index.resumable import _atomic_json
 
 
@@ -80,7 +68,7 @@ def _load_index_options(out_dir: str) -> dict | None:
     """Index-wide payload options pinned at the FIRST write_segment.
     store_positions/store_offsets are facts about the data on disk, not
     per-call arguments: mixing them across segments of one index would
-    misalign merged payloads (builder._merge_runs_to_blocks guards the
+    misalign merged payloads (builder._merge_groups guards the
     symptom; this pins the cause). Returns None for pre-option indexes."""
     p = _options_path(out_dir)
     if os.path.exists(p):
@@ -298,105 +286,11 @@ def _merge_runs_to_gen(
         .select("term")
         .withColumn("is_hot", F.lit(True))
     )
-    (
-        _salt_runs(runs, hot_df, hot_df.count(), hot_salt_span)
-        .groupBy("term", "salt")
-        .applyInPandas(_merge_runs_to_blocks, schema=BLOCK_SCHEMA)
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings", f"gen={gen_name}"))
+    merge_postings(
+        spark, _salt_runs(runs, hot_df, hot_df.count(), hot_salt_span)
+    ).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "postings", f"gen={gen_name}")
     )
-
-
-_COMPACT_RUN_SCHEMA = StructType(
-    [
-        StructField("term", StringType()),
-        StructField("salt", LongType()),
-        StructField("first_doc", LongType()),
-        StructField("docs_vb", BinaryType()),
-        StructField("tfs_vb", BinaryType()),
-        StructField("norms_b", BinaryType()),
-        StructField("pos_vb", BinaryType()),
-        StructField("offs_vb", BinaryType()),
-        StructField("olen_vb", BinaryType()),
-        StructField("pay_vb", BinaryType()),
-    ]
-)
-
-
-def _drop_deleted_rows(del_b):
-    """Run-row rewrite dropping tombstoned docs before the re-merge —
-    SegmentMerger applies liveDocs during merge (reference
-    lucene/core/src/java/org/apache/lucene/index/SegmentMerger.java:114-151).
-    Dropping docs preserves the run invariant (disjoint ascending ranges
-    stay disjoint and ascending); fully-deleted runs vanish."""
-    cols = [f.name for f in _COMPACT_RUN_SCHEMA.fields]
-
-    def _seg_keep(payload_vb, t, t2, keep, delta: bool):
-        """Re-segment one occurrence payload (positions or offset
-        starts/lengths) keeping only surviving docs' tf segments."""
-        raw = decode(bytes(payload_vb))
-        flat = segmented_delta_decode(raw, t) if delta else raw
-        ends = np.cumsum(t)
-        parts = [flat[(ends[i] - t[i]):ends[i]] for i in np.flatnonzero(keep)]
-        flat2 = np.concatenate(parts) if parts else np.empty(0, np.int64)
-        return encode(segmented_delta_encode(flat2, t2) if delta else flat2)
-
-    def fn(batches):
-        dele = del_b.value
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                offs_vb0 = bytes(getattr(r, "offs_vb", b"") or b"")
-                olen_vb0 = bytes(getattr(r, "olen_vb", b"") or b"")
-                pay_vb0 = bytes(getattr(r, "pay_vb", b"") or b"")
-                d = delta_decode(decode(bytes(r.docs_vb)))
-                keep = ~np.isin(d, dele)
-                if keep.all():
-                    rows.append(
-                        (r.term, int(r.salt), int(r.first_doc),
-                         bytes(r.docs_vb), bytes(r.tfs_vb),
-                         bytes(r.norms_b), bytes(r.pos_vb),
-                         offs_vb0, olen_vb0, pay_vb0)
-                    )
-                    continue
-                if not keep.any():
-                    continue
-                t = decode(bytes(r.tfs_vb))
-                nb = np.frombuffer(bytes(r.norms_b), dtype=np.uint8)
-                d2, t2, nb2 = d[keep], t[keep], nb[keep]
-                pos_vb = (
-                    _seg_keep(r.pos_vb, t, t2, keep, delta=True)
-                    if r.pos_vb else b""
-                )
-                offs_vb = (
-                    _seg_keep(offs_vb0, t, t2, keep, delta=True)
-                    if offs_vb0 else b""
-                )
-                olen_vb = (
-                    _seg_keep(olen_vb0, t, t2, keep, delta=False)
-                    if olen_vb0 else b""
-                )
-                pay_vb = (
-                    _seg_keep(pay_vb0, t, t2, keep, delta=False)
-                    if pay_vb0 else b""
-                )
-                rows.append(
-                    (r.term, int(r.salt), int(d2[0]),
-                     encode(delta_encode(d2)), encode(t2),
-                     nb2.tobytes(), pos_vb, offs_vb, olen_vb, pay_vb)
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-            else:
-                yield pd.DataFrame(
-                    {c: pd.array([], dtype="int64")
-                     if c in ("salt", "first_doc")
-                     else pd.array([], dtype=object)
-                     for c in cols}
-                )
-
-    return fn
 
 
 def _compact_gens(
@@ -432,16 +326,17 @@ def _compact_gens(
     )
     has_deletes = deleted is not None and deleted.size > 0
     if has_deletes:
+        # merge-applies-deletes: the tombstone filter runs on the block
+        # rows before they are re-merged
         del_b = spark.sparkContext.broadcast(np.asarray(deleted, np.int64))
-        blocks = blocks.mapInPandas(
-            _drop_deleted_rows(del_b), schema=_COMPACT_RUN_SCHEMA
-        )
-    (
-        blocks.groupBy("term", "salt")
-        .applyInPandas(_merge_runs_to_blocks, schema=BLOCK_SCHEMA)
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings", f"gen={gen_name}"))
+
+        def drop_deleted(batches):
+            for pdf in batches:
+                yield drop_deleted_docs(pdf, del_b.value)
+
+        blocks = blocks.mapInPandas(drop_deleted, schema=blocks.schema)
+    merge_postings(spark, blocks).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "postings", f"gen={gen_name}")
     )
     if has_deletes:
         # per-gen stats must reflect the dropped docs: recompute from the

@@ -95,14 +95,19 @@ _GVINT = 0x03
 _MAX_EXCEPTIONS = 7  # PForUtil.java:29
 
 
-def _leb_size(v: np.ndarray) -> int:
-    """Total LEB128 bytes for v without materializing the encoding."""
+def _leb_lengths(v: np.ndarray) -> np.ndarray:
+    """LEB128 byte count of each value of v (uint64)."""
     nbytes = np.ones(v.shape, dtype=np.int64)
     tmp = v >> np.uint64(7)
     while np.any(tmp):
         nbytes += (tmp > 0).astype(np.int64)
         tmp >>= np.uint64(7)
-    return int(nbytes.sum())
+    return nbytes
+
+
+def _leb_size(v: np.ndarray) -> int:
+    """Total LEB128 bytes for v without materializing the encoding."""
+    return int(_leb_lengths(v).sum())
 
 
 def _pack_bits(v: np.ndarray, w: int) -> bytes:
@@ -246,3 +251,48 @@ def decode_block(buf: bytes) -> np.ndarray:
         exc_val = tail[n_exc:].astype(np.uint64)
         base[exc_idx] = exc_val
     return base.astype(np.int64)
+
+
+def encode_blocks(values: np.ndarray, counts: np.ndarray) -> list[bytes]:
+    """``encode_block`` of each consecutive segment of ``values`` (segment
+    i holds ``counts[i]`` values), byte-identical to encoding them one by
+    one. Under the default LEB codec the whole array is encoded in one
+    vectorized pass and cut at the segments' byte boundaries (LEB128
+    encodes every value on its own); the other codecs choose a format
+    per payload, so they encode segment by segment."""
+    v = np.asarray(values, dtype=np.uint64)
+    bounds = np.concatenate(([0], np.cumsum(counts, dtype=np.int64)))
+    if DEFAULT_PACKED or DEFAULT_GVINT:
+        return [
+            encode_block(v[a:b])
+            for a, b in zip(bounds[:-1].tolist(), bounds[1:].tolist())
+        ]
+    body = leb_encode(v)
+    cuts = np.concatenate(([0], np.cumsum(_leb_lengths(v))))[bounds].tolist()
+    return [
+        _LEB_PREFIX + body[a:b] if b > a else b""
+        for a, b in zip(cuts[:-1], cuts[1:])
+    ]
+
+
+def decode_blocks(payloads) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a sequence of ``encode_block`` payloads into one flat int64
+    array plus the value count of each payload. When every payload is
+    LEB-tagged (or empty) the joined bytes decode in one vectorized pass;
+    otherwise payloads decode one by one."""
+    n = len(payloads)
+    lens = np.fromiter(map(len, payloads), dtype=np.int64, count=n)
+    data = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    ends = np.cumsum(lens)
+    heads = (ends - lens)[lens > 0]
+    if not (data[heads] == _LEB).all():
+        parts = [decode_block(p) for p in payloads]
+        counts = np.fromiter(map(len, parts), dtype=np.int64, count=n)
+        flat = np.concatenate(parts) if parts else np.empty(0, np.int64)
+        return flat.astype(np.int64, copy=False), counts
+    body = np.ones(data.size, dtype=bool)
+    body[heads] = False  # tag bytes carry no value
+    is_end = body & ((data & 0x80) == 0)
+    ends_seen = np.concatenate(([0], np.cumsum(is_end)))
+    counts = ends_seen[ends] - ends_seen[ends - lens]
+    return leb_decode(data[body]), counts

@@ -11,7 +11,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from lucene_spark.session import get_spark
 
-    s = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
+    s = get_spark()  # local[SPARK_GRAFT_CPUS], else the affinity core count
     s.sparkContext.setLogLevel("ERROR")
     yield s
 
