@@ -31,7 +31,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CORPUS_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
-BUILD_DIR = "/root/repo/.build/bench_idx"
+BUILD_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".build", "bench_idx"
+)
 
 
 def _sf_value(sf_dir: str) -> float:

@@ -44,10 +44,15 @@ STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "it"]
 
 _searchers: dict[str, IndexSearcher] = {}
 
+# cached indexes live in .build/ of the checkout this package sits in
+BUILD_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".build"
+)
+
 
 def _index_dir_for(sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join("/root/repo/.build/gate_idx", tag)
+    return os.path.join(BUILD_DIR, "gate_idx", tag)
 
 
 def _docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:

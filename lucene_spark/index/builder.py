@@ -84,8 +84,9 @@ from lucene_spark.analysis.fastpath import tokenize_window_ascii
 from lucene_spark.analysis.standard import analyze_with_offsets
 from lucene_spark.util.blockcodec import (
     CODEC_NAME,
-    decode_blocks,
-    encode_blocks,
+    OCC_COLS,
+    decode_postings,
+    encode_postings,
 )
 from lucene_spark.util.blockcodec import encode_block as encode
 from lucene_spark.util.metaio import write_meta_parquet
@@ -868,22 +869,8 @@ MERGE_COLS = [
     "term", "salt", "first_doc", "docs_vb", "tfs_vb", "norms_b",
     "pos_vb", "offs_vb", "olen_vb", "pay_vb",
 ]
-# occurrence payloads: (column, delta-coded per posting, name in errors)
-_OCC_PAYLOADS = (
-    ("pos_vb", True, "positions"),
-    ("offs_vb", True, "offsets"),
-    ("olen_vb", False, None),
-    ("pay_vb", False, "payloads"),
-)
-
-
-def _runs_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Prefix sums restarted at every segment of ``gaps`` (segment i holds
-    counts[i] values, its first gap absolute): the vectorized inverse of
-    per-segment delta coding over many segments at once."""
-    cs = np.cumsum(gaps, dtype=np.int64)
-    before = np.concatenate(([0], cs))[np.cumsum(counts) - counts]
-    return cs - np.repeat(before, counts)
+# the name of each occurrence payload in the mixed-layout error
+_OCC_LABELS = {"pos_vb": "positions", "offs_vb": "offsets", "pay_vb": "payloads"}
 
 
 def _merge_groups(cols: list[np.ndarray], starts: np.ndarray) -> pd.DataFrame:
@@ -893,10 +880,10 @@ def _merge_groups(cols: list[np.ndarray], starts: np.ndarray) -> pd.DataFrame:
     [starts[g], starts[g+1]). Runs of one group hold disjoint docID
     ranges, so the group's postings are its runs concatenated in
     first_doc order (SegmentMerger's merge with no re-sort; block encode
-    = Lucene104PostingsWriter.java:237-359). Every payload column of the
-    batch decodes in one vectorized pass; block impact bounds come from
-    reduceat over the block starts; only the block payload encodes are
-    per block."""
+    = Lucene104PostingsWriter.java:237-359). The batch decodes in one
+    vectorized pass per column (decode_postings), block impact bounds
+    come from reduceat over the block starts, and the blocks encode in
+    one batched pass per column (encode_postings)."""
     n = cols[0].size
     sizes = np.diff(np.append(starts, n))
     gid = np.repeat(np.arange(starts.size), sizes)
@@ -904,49 +891,34 @@ def _merge_groups(cols: list[np.ndarray], starts: np.ndarray) -> pd.DataFrame:
     if np.any((first[1:] < first[:-1]) & (gid[1:] == gid[:-1])):
         order = np.lexsort((first, gid))
         cols = [c[order] for c in cols]
-    term, salt, _, docs_vb, tfs_vb, norms_b = cols[:6]
+    rows = dict(zip(MERGE_COLS, cols))
+    term, salt = rows["term"], rows["salt"]
 
-    gaps, run_ndocs = decode_blocks(docs_vb)
-    docs = _runs_cumsum(gaps, run_ndocs)
-    tfs, _ = decode_blocks(tfs_vb)
-    norms = np.frombuffer(b"".join(norms_b), dtype=np.uint8)
-    run_post = np.concatenate(([0], np.cumsum(run_ndocs)))
-    occ = np.concatenate(([0], np.cumsum(tfs)))
-
-    # occurrence payloads, laid out on the global occurrence index. The
-    # mixed guard: the flat arrays are cut by occurrence offsets of ALL
-    # runs, so a group where only SOME runs carry a payload would be
-    # silently misaligned. write_segment pins the index-wide options
-    # (index_options.json), so this can only mean corruption or a
-    # hand-mixed layout — fail loudly rather than emit garbage payloads.
-    occ_vals: dict[str, np.ndarray] = {}
+    # which groups carry each occurrence payload. The mixed guard: the
+    # flat arrays are cut by occurrence offsets of ALL runs, so a group
+    # where only SOME runs carry a payload would be silently misaligned.
+    # write_segment pins the index-wide options (index_options.json), so
+    # this can only mean corruption or a hand-mixed layout — fail loudly
+    # rather than emit garbage payloads.
     occ_has: dict[str, np.ndarray] = {}
-    for ci, (col, delta, label) in enumerate(_OCC_PAYLOADS, start=6):
-        vb = cols[ci]
-        present = np.fromiter(map(bool, vb), dtype=bool, count=n)
-        if not present.any():
-            continue
+    for col, _, _ in OCC_COLS:
+        present = np.fromiter(map(bool, rows[col]), dtype=bool, count=n)
         carried = np.add.reduceat(present.astype(np.int64), starts)
         mixed = np.flatnonzero((carried > 0) & (carried != sizes))
-        if label is not None and mixed.size:
+        if col in _OCC_LABELS and mixed.size:
             g = int(mixed[0])
+            label = _OCC_LABELS[col]
             raise ValueError(
                 f"term {term[starts[g]]!r}: {carried[g]}/{sizes[g]} runs "
                 f"carry {label} — segments were written with mixed "
                 f"store_{label}"
             )
-        post_mask = np.repeat(present, run_ndocs)
-        vals, _ = decode_blocks(vb[present])
-        if delta:
-            vals = _runs_cumsum(vals, tfs[post_mask])
-        if not present.all():
-            full = np.zeros(int(occ[-1]), dtype=np.int64)
-            full[np.repeat(post_mask, tfs)] = vals
-            vals = full
-        occ_vals[col] = vals
         occ_has[col] = carried > 0
+    p = decode_postings(rows)
+    docs, tfs, norms = p["docs"], p["tfs"], p["norms"]
 
     # block layout: each group's postings cut every BLOCK_SIZE docs
+    run_post = np.concatenate(([0], np.cumsum(p["ndocs"])))
     g_post0 = run_post[starts]
     g_npost = run_post[np.append(starts[1:], n)] - g_post0
     nblk = (g_npost + BLOCK_SIZE - 1) // BLOCK_SIZE
@@ -971,25 +943,13 @@ def _merge_groups(cols: list[np.ndarray], starts: np.ndarray) -> pd.DataFrame:
     else:
         for c in ("max_tf", "min_norm", "min_tf", "max_norm"):
             out[c] = np.empty(0, dtype=np.int32)
-    # blocks tile the batch's postings, so their payloads encode in one
-    # batched call per column
-    out["docs_vb"] = encode_blocks(segmented_delta_encode(docs, bn), bn)
-    out["tfs_vb"] = encode_blocks(tfs, bn)
-    norm_bytes = norms.tobytes()
-    out["norms_b"] = [
-        norm_bytes[a:b] for a, b in zip(bstart.tolist(), bend.tolist())
-    ]
-    bocc = occ[bend] - occ[bstart]
-    for col, delta, _ in _OCC_PAYLOADS:
-        if col not in occ_vals:
-            out[col] = [b""] * blk_g.size
-            continue
-        vals = occ_vals[col]
-        if delta:
-            vals = segmented_delta_encode(vals, tfs)
-        enc = encode_blocks(vals, bocc)
-        has = occ_has[col][blk_g]
-        out[col] = [e if h else b"" for e, h in zip(enc, has.tolist())]
+    # blocks tile the batch's postings, so they encode in one batched
+    # call per column
+    out.update(encode_postings(dict(p, ndocs=bn)))
+    for col, _, _ in OCC_COLS:
+        has = occ_has[col][blk_g].tolist()
+        enc = out.get(col, [b""] * blk_g.size)
+        out[col] = [e if h else b"" for e, h in zip(enc, has)]
     return pd.DataFrame(out, columns=_BLOCK_COLS)
 
 

@@ -9,8 +9,9 @@ without the deleted docs.
 Spark translation:
   - delete_by_keys / delete_by_query append docIDs to a `deletes/`
     tombstone table (atomic per-batch parquet write). IndexSearcher
-    loads the tombstone set and every decode kernel drops those docIDs
-    (np.isin against a broadcast sorted array — the bitset analog).
+    loads the tombstone set and its one postings reader,
+    IndexSearcher.read_postings, drops those docIDs (one np.isin per
+    Arrow batch against a broadcast sorted array — the bitset analog).
     Scores of surviving docs are UNCHANGED (stale stats, faithful to
     Lucene's pre-merge behavior).
   - expunge_deletes rewrites postings/docmap/terms/stats without the
@@ -31,15 +32,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.builder import BLOCK_SCHEMA, _runs_cumsum
-from lucene_spark.util.blockcodec import decode_block as decode
-from lucene_spark.util.blockcodec import decode_blocks
-from lucene_spark.util.blockcodec import encode_block as encode
-from lucene_spark.util.blockcodec import validate_manifest_codec
-from lucene_spark.util.varbyte import (
-    delta_encode,
-    segmented_delta_decode,
-    segmented_delta_encode,
+from lucene_spark.index.builder import BLOCK_SCHEMA
+from lucene_spark.util.blockcodec import (
+    decode_postings,
+    encode_postings,
+    keep_postings,
+    validate_manifest_codec,
 )
 
 
@@ -121,59 +119,73 @@ def publish_tombstones(index_dir: str, staging_path: str) -> None:
     os.replace(staging_path, os.path.join(d, os.path.basename(staging_path)))
 
 
-def _seg_keep(payload_vb, t, t2, keep, delta: bool) -> bytes:
-    """Re-segment one occurrence payload (positions, offset starts or
-    lengths, payloads) keeping only surviving docs' tf segments."""
-    raw = decode(payload_vb)
-    flat = segmented_delta_decode(raw, t) if delta else raw
-    ends = np.cumsum(t)
-    parts = [flat[(ends[i] - t[i]):ends[i]] for i in np.flatnonzero(keep)]
-    flat2 = np.concatenate(parts) if parts else np.empty(0, np.int64)
-    return encode(segmented_delta_encode(flat2, t2) if delta else flat2)
-
-
 def drop_deleted_docs(pdf: pd.DataFrame, deleted: np.ndarray) -> pd.DataFrame:
     """The tombstone filter for postings rows — blocks or runs alike:
     drop the docIDs in ``deleted`` (sorted) from every row (SegmentMerger
     applies liveDocs during merge, reference lucene/core/src/java/org/
-    apache/lucene/index/SegmentMerger.java:114-151). The batch's docIDs
-    decode in one vectorized pass; rows that lose no doc pass through
-    untouched, rows that lose every doc vanish, and only the rest are
-    re-encoded, with whichever header columns the row has recomputed.
-    Each row is filtered on its own, so rows with disjoint ascending doc
-    ranges stay disjoint and ascending."""
-    gaps, counts = decode_blocks(pdf["docs_vb"].to_numpy())
-    docs = _runs_cumsum(gaps, counts)
-    hit = np.isin(docs, deleted)
-    bnd = np.concatenate(([0], np.cumsum(counts)))
-    hits_before = np.concatenate(([0], np.cumsum(hit)))
-    n_hit = hits_before[bnd[1:]] - hits_before[bnd[:-1]]
-    out = {c: pdf[c].to_numpy().copy() for c in pdf.columns}
-    for i in np.flatnonzero((n_hit > 0) & (n_hit < counts)):
-        keep = ~hit[bnd[i]:bnd[i + 1]]
-        d2 = docs[bnd[i]:bnd[i + 1]][keep]
-        t = decode(out["tfs_vb"][i])
-        nb2 = np.frombuffer(out["norms_b"][i], dtype=np.uint8)[keep]
-        t2 = t[keep]
-        for c, delta in (
-            ("pos_vb", True), ("offs_vb", True),
-            ("olen_vb", False), ("pay_vb", False),
-        ):
-            if c in out and out[c][i]:
-                out[c][i] = _seg_keep(out[c][i], t, t2, keep, delta)
-        out["docs_vb"][i] = encode(delta_encode(d2))
-        out["tfs_vb"][i] = encode(t2)
-        out["norms_b"][i] = nb2.tobytes()
-        header = {
-            "first_doc": d2[0], "ndocs": d2.size, "min_doc": d2[0],
-            "max_doc": d2[-1], "max_tf": t2.max(), "min_norm": nb2.min(),
-            "min_tf": t2.min(), "max_norm": nb2.max(),
-        }
-        for c, v in header.items():
-            if c in out:  # runs carry first_doc, blocks the rest
-                out[c][i] = v
-    live = n_hit < counts
-    return pd.DataFrame({c: v[live] for c, v in out.items()})
+    apache/lucene/index/SegmentMerger.java:114-151). The batch decodes
+    and re-encodes in one vectorized pass per column; a batch that loses
+    no doc passes through untouched, rows that lose every doc vanish, and
+    whichever header columns a row has are recomputed. Each row is
+    filtered on its own, so rows with disjoint ascending doc ranges stay
+    disjoint and ascending."""
+    p = decode_postings(pdf)
+    keep = ~np.isin(p["docs"], deleted)
+    if keep.all():
+        return pdf
+    p = keep_postings(p, keep)
+    live = p["ndocs"] > 0
+    p["ndocs"] = p["ndocs"][live]
+    out = pdf[live].reset_index(drop=True)
+    for col, enc in encode_postings(p).items():
+        # a payload a row did not carry stays empty
+        had = out[col].map(bool).tolist()
+        out[col] = [e if h else b"" for e, h in zip(enc, had)]
+    n = p["ndocs"]
+    first = np.cumsum(n) - n
+    d, t, nb = p["docs"], p["tfs"], p["norms"]
+    header = {
+        "first_doc": d[first], "ndocs": n, "min_doc": d[first],
+        "max_doc": d[first + n - 1],
+        "max_tf": np.maximum.reduceat(t, first),
+        "min_tf": np.minimum.reduceat(t, first),
+        "min_norm": np.minimum.reduceat(nb, first),
+        "max_norm": np.maximum.reduceat(nb, first),
+    }
+    for c, v in header.items():
+        if c in out:  # runs carry first_doc, blocks the rest
+            out[c] = v.astype(out[c].dtype)
+    return out
+
+
+def term_stats_from_blocks(postings: DataFrame) -> DataFrame:
+    """(term, df, cf, max_tf, min_norm) recomputed from postings blocks —
+    the term dictionary of rewritten postings (expunge, compaction with
+    deletes): df, max_tf and min_norm from the block headers, cf by
+    summing the tfs of each block through the batch decoder."""
+    def with_cf(batches):
+        for pdf in batches:
+            p = decode_postings(pdf[["tfs_vb"]])
+            occ = np.concatenate(([0], np.cumsum(p["tfs"])))
+            ends = np.cumsum(p["ndocs"])
+            yield pdf.drop(columns="tfs_vb").assign(
+                cf=occ[ends] - occ[ends - p["ndocs"]]
+            )
+
+    return (
+        postings.select("term", "ndocs", "max_tf", "min_norm", "tfs_vb")
+        .mapInPandas(
+            with_cf,
+            schema="term string, ndocs int, max_tf int, min_norm int, cf long",
+        )
+        .groupBy("term")
+        .agg(
+            F.sum("ndocs").cast("long").alias("df"),
+            F.sum("cf").alias("cf"),
+            F.max("max_tf").alias("max_tf"),
+            F.min("min_norm").alias("min_norm"),
+        )
+    )
 
 
 def expunge_deletes(spark: SparkSession, index_dir: str) -> dict:
@@ -227,27 +239,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str) -> dict:
     docmap2.write.mode("overwrite").parquet(dm_tmp)
 
     # recompute term dictionary + stats from the surviving blocks
-    new_posts = spark.read.parquet(tmp)
-    terms2 = new_posts.groupBy("term").agg(
-        F.sum("ndocs").cast("long").alias("df"),
-        F.max("max_tf").alias("max_tf"),
-        F.min("min_norm").alias("min_norm"),
-    )
-    # cf needs decoded tf sums
-    def cf_rows(batches):
-        for pdf in batches:
-            terms, cfs = [], []
-            for term, tfs_vb in zip(pdf["term"], pdf["tfs_vb"]):
-                terms.append(term)
-                cfs.append(int(decode(bytes(tfs_vb)).sum()))
-            yield pd.DataFrame({"term": terms, "cf": pd.array(cfs, dtype="int64")})
-
-    cf_df = new_posts.select("term", "tfs_vb").mapInPandas(
-        cf_rows, schema="term string, cf long"
-    ).groupBy("term").agg(F.sum("cf").alias("cf"))
-    terms_joined = terms2.join(cf_df, "term").select(
-        "term", "df", "cf", "max_tf", "min_norm"
-    )
+    terms_joined = term_stats_from_blocks(spark.read.parquet(tmp))
     agg = terms_joined.agg(
         F.sum("cf").alias("sttf"), F.sum("df").alias("sdf"), F.count("*").alias("nt")
     ).collect()[0]

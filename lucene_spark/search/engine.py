@@ -28,6 +28,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -44,9 +45,11 @@ from pyspark.sql.types import (
 
 from lucene_spark.analysis import analyze
 from lucene_spark.search.bm25 import BM25Scorer, idf
-from lucene_spark.util.blockcodec import decode_block as decode
-from lucene_spark.util.blockcodec import validate_manifest_codec
-from lucene_spark.util.varbyte import delta_decode, segmented_delta_decode
+from lucene_spark.util.blockcodec import (
+    decode_postings,
+    keep_postings,
+    validate_manifest_codec,
+)
 
 def _pos_shift(max_pos: int, headroom: int, floor_bits: int = 21) -> np.int64:
     """Doc-key packing shift: smallest power of two > max_pos + headroom
@@ -63,12 +66,28 @@ def _pos_shift(max_pos: int, headroom: int, floor_bits: int = 21) -> np.int64:
     return np.int64(1) << np.int64(bits)
 
 
-SCORE_SCHEMA = StructType(
-    [
-        StructField("docID", LongType()),
-        StructField("score", FloatType()),
-        StructField("tf", IntegerType()),
-    ]
+def _list_column(flat: np.ndarray, counts: np.ndarray) -> pd.Series:
+    """Per-posting list column cut from flat per-occurrence values: built
+    as one Arrow ListArray, so no per-row Python object is made."""
+    offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+    return pd.Series(
+        pd.arrays.ArrowExtensionArray(
+            pa.ListArray.from_arrays(offsets, pa.array(flat, pa.int64()))
+        )
+    )
+
+
+# read_postings output columns: (name, type, enabling flag)
+_READ_COLS = (
+    ("docID", LongType(), None),
+    ("term", StringType(), None),
+    ("tf", LongType(), None),
+    ("norm", IntegerType(), "norms"),
+    ("score", FloatType(), "weights"),
+    ("positions", ArrayType(LongType()), "positions"),
+    ("start_offsets", ArrayType(LongType()), "offsets"),
+    ("end_offsets", ArrayType(LongType()), "offsets"),
+    ("payloads", ArrayType(LongType()), "payloads"),
 )
 
 
@@ -113,18 +132,18 @@ class IndexSearcher:
         self.reload_deletes()
 
     # above this many tombstones the set is no longer shipped to tasks at
-    # all: decode kernels skip filtering and an anti-join strips deleted
-    # docs instead (10^9 deletes would be a multi-GB broadcast)
+    # all: read_postings strips deleted docs with an anti-join instead
+    # (10^9 deletes would be a multi-GB broadcast)
     ANTIJOIN_DELETES_THRESHOLD = 5_000_000
 
     def reload_deletes(self) -> int:
         """Load the tombstone set (PendingDeletes bitset analog). Small
         sets are broadcast ONCE (torrent-distributed; the previous design
         captured the array in every kernel closure, re-serializing it per
-        task) and dropped inside the decode kernels; sets above
+        task) and dropped inside read_postings' kernel; sets above
         ANTIJOIN_DELETES_THRESHOLD stay distributed and are removed by a
-        left_anti join on the decoded rows. Scores of surviving docs keep
-        the stale pre-merge statistics, like Lucene until a merge."""
+        left_anti join on read_postings' rows. Scores of surviving docs
+        keep the stale pre-merge statistics, like Lucene until a merge."""
         from lucene_spark.index.deletes import tombstones_df
 
         tdf = tombstones_df(self.spark, self.index_dir)
@@ -157,8 +176,8 @@ class IndexSearcher:
         `reload_deletes()` (or a fresh searcher) drops the wrapper and
         the docs are visible again, exactly like opening the directory
         without the wrapper. Soft-hidden docs merge into this reader's
-        broadcast/anti-join liveness, so every decode kernel and the
-        cache epoch see them as deleted. Returns the number of docs
+        broadcast/anti-join liveness, so read_postings and the cache
+        epoch see them as deleted. Returns the number of docs
         hidden by the field (including ones also hard-deleted)."""
         from lucene_spark.index.docvalues import read_docvalues
 
@@ -234,9 +253,9 @@ class IndexSearcher:
         ts = list(dict.fromkeys(terms))
         if not ts:
             return self._empty_topk()
-        docs = self.postings_tf(ts).select("docID").distinct()
-        docs = self._strip_deleted(docs).withColumn(
-            "score", F.lit(1.0).cast(FloatType())
+        docs = (
+            self.postings_tf(ts).select("docID").distinct()
+            .withColumn("score", F.lit(1.0).cast(FloatType()))
         )
         if k is None:
             return docs
@@ -247,15 +266,11 @@ class IndexSearcher:
         ts = list(dict.fromkeys(terms))
         if not ts:
             return 0
-        return (
-            self._strip_deleted(
-                self.postings_tf(ts).select("docID").distinct()
-            ).count()
-        )
+        return self.postings_tf(ts).select("docID").distinct().count()
 
     def _strip_deleted(self, df: DataFrame, col: str = "docID") -> DataFrame:
         """Anti-join fallback for tombstone sets too large to broadcast
-        (kernels received an empty array in that mode)."""
+        (the broadcast array is empty in that mode)."""
         if self._tombstones is None:
             return df
         tomb = self._tombstones
@@ -460,44 +475,99 @@ class IndexSearcher:
             t: float(self.scorer.term_weight(s.df)) for t, s in stats.items()
         }
 
-    # -- scoring kernel ---------------------------------------------------
+    # -- the postings reader ----------------------------------------------
 
-    def _decode_score_udf(self, weights: dict[str, float]):
+    def read_postings(
+        self,
+        terms: list[str] | None,
+        *,
+        positions: bool = False,
+        offsets: bool = False,
+        payloads: bool = False,
+        norms: bool = False,
+        weights: dict[str, float] | None = None,
+        blocks: DataFrame | None = None,
+    ) -> DataFrame:
+        """The one postings reader: one row per live posting of ``terms``
+        (every term when None) — PostingsEnum with the FREQS / POSITIONS /
+        OFFSETS / PAYLOADS flags (reference lucene/core/src/java/org/
+        apache/lucene/index/PostingsEnum.java:38-58). Columns: docID,
+        term, tf, then per flag
+        - ``norms``: norm (the doc's length byte);
+        - ``weights`` (term -> BM25 weight): score, float32 in Lucene's
+          exact expression shape w - w / (1 + tf * cache[norm]);
+        - ``positions``: positions (array, ascending);
+        - ``offsets``: start_offsets / end_offsets (arrays of
+          [inclusive, exclusive) character offsets, one per position);
+        - ``payloads``: payloads (array, one per position).
+        ``blocks`` reads only those block rows of ``terms`` (the pruned
+        path's surviving blocks) instead of all of them.
+
+        Plan: one ``term IN (...)`` scan selecting only the columns the
+        flags need, feeding one mapInPandas kernel that decodes each
+        Arrow batch at once (blockcodec.decode_postings) and drops the
+        broadcast tombstones with one np.isin; above
+        ANTIJOIN_DELETES_THRESHOLD the tombstones leave through one
+        anti-join on the output instead. This is the only place where
+        postings meet tombstones: callers never filter deleted docs
+        again."""
+        if blocks is None:
+            blocks = self._postings
+            if terms is not None:
+                blocks = blocks.filter(
+                    F.col("term").isin(list(dict.fromkeys(terms)))
+                )
+        flags = {
+            "norms": norms, "weights": weights is not None,
+            "positions": positions, "offsets": offsets, "payloads": payloads,
+        }
+        schema = StructType(
+            [StructField(n, t) for n, t, f in _READ_COLS if f is None or flags[f]]
+        )
+        cols = ["term", "docs_vb", "tfs_vb"]
+        cols += ["norms_b"] if norms or weights is not None else []
+        cols += ["pos_vb"] if positions else []
+        cols += ["offs_vb", "olen_vb"] if offsets else []
+        cols += ["pay_vb"] if payloads else []
         cache = self.scorer.cache
         dele_bc = self._deleted_bc
 
-        def fn(batches):
+        def kernel(batches):
             dele = dele_bc.value
             for pdf in batches:
-                outs = []
-                for term, tfs_vb, norms_b, docs_vb in zip(
-                    pdf["term"], pdf["tfs_vb"], pdf["norms_b"], pdf["docs_vb"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    norms = np.frombuffer(bytes(norms_b), dtype=np.uint8)
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        doc_ids, tfs, norms = doc_ids[keep], tfs[keep], norms[keep]
-                    w = np.float32(weights[term])
-                    inv = cache[norms]
-                    scores = (
+                if not len(pdf):
+                    continue
+                p = decode_postings(pdf)
+                if dele.size:
+                    p = keep_postings(p, ~np.isin(p["docs"], dele))
+                nd, tfs = p["ndocs"], p["tfs"]
+                out = {
+                    "docID": p["docs"],
+                    "term": np.repeat(pdf["term"].to_numpy(), nd),
+                    "tf": tfs,
+                }
+                if norms:
+                    out["norm"] = p["norms"].astype(np.int32)
+                if weights is not None:
+                    w = np.repeat(
+                        pdf["term"].map(weights).to_numpy(np.float32), nd
+                    )
+                    inv = cache[p["norms"]]
+                    out["score"] = (
                         w - w / (np.float32(1.0) + tfs.astype(np.float32) * inv)
                     ).astype(np.float32)
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "docID": doc_ids,
-                                "score": scores,
-                                "tf": tfs.astype(np.int32),
-                            }
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": [], "score": [], "tf": []}
-                )
+                if positions:
+                    out["positions"] = _list_column(p["pos"], tfs)
+                if offsets:
+                    out["start_offsets"] = _list_column(p["offs"], tfs)
+                    out["end_offsets"] = _list_column(p["offs"] + p["olen"], tfs)
+                if payloads:
+                    out["payloads"] = _list_column(p["pay"], tfs)
+                yield pd.DataFrame(out)
 
-        return fn
+        return self._strip_deleted(
+            blocks.select(*cols).mapInPandas(kernel, schema=schema)
+        )
 
     def _scored_postings(
         self,
@@ -505,120 +575,41 @@ class IndexSearcher:
         stats: dict[str, TermStats],
         weights: dict[str, float] | None = None,
     ) -> DataFrame:
-        """(docID, term, score) rows for every posting of the query terms
-        (stats may cover a superset of terms — only `terms` are scored).
-        `weights` overrides the per-term idf weight (BlendedTermQuery
-        scores every term with an artificial blended df)."""
+        """(docID, term, tf, score) rows for every posting of the query
+        terms (stats may cover a superset of terms — only `terms` are
+        scored). `weights` overrides the per-term idf weight
+        (BlendedTermQuery scores every term with an artificial blended
+        df)."""
         if weights is None:
             weights = {
                 t: w for t, w in self._weights(stats).items() if t in set(terms)
             }
-        # select only the scoring columns so the parquet scan prunes
-        # pos_vb (positions are ~half the index bytes; ReadSchema shows it)
-        blocks = self._postings.filter(F.col("term").isin(list(weights))).select(
-            "term", "docs_vb", "tfs_vb", "norms_b"
-        )
-        return self._strip_deleted(
-            blocks.mapInPandas(self._decode_score_udf(weights), schema=SCORE_SCHEMA)
-        )
+        return self.read_postings(list(weights), weights=weights)
 
     def postings_tf(self, terms: list[str] | None = None) -> DataFrame:
         """Decode posting blocks back to (docID, term, tf) rows — the
         uncompressed inverted index (used for SQL-expressible duels and
         as the building block for exports)."""
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("term", StringType()),
-                StructField("tf", LongType()),
-            ]
-        )
-
-        dele_bc = self._deleted_bc
-
-        def fn(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for term, docs_vb, tfs_vb in zip(
-                    pdf["term"], pdf["docs_vb"], pdf["tfs_vb"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        doc_ids, tfs = doc_ids[keep], tfs[keep]
-                    outs.append(
-                        pd.DataFrame({"docID": doc_ids, "term": term, "tf": tfs})
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"), "term": [], "tf": pd.array([], dtype="int64")}
-                )
-
-        blocks = self._postings
-        if terms is not None:
-            blocks = blocks.filter(F.col("term").isin(list(set(terms))))
-        return self._strip_deleted(
-            blocks.select("term", "docs_vb", "tfs_vb").mapInPandas(fn, schema=schema)
-        )
+        return self.read_postings(terms)
 
     def postings_positions(self, terms: list[str]) -> DataFrame:
         """Decode position data to exploded (docID, term, pos) rows —
         the uncompressed positional index for the query terms (gate
         duels, interval/phrase analytics in plain DataFrame ops)."""
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("term", StringType()),
-                StructField("pos", LongType()),
-            ]
-        )
-        dele_bc = self._deleted_bc
-
-        def fn(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for term, docs_vb, tfs_vb, pos_vb in zip(
-                    pdf["term"], pdf["docs_vb"], pdf["tfs_vb"], pdf["pos_vb"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    flat = segmented_delta_decode(decode(bytes(pos_vb)), tfs)
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        if not keep.all():
-                            ends = np.cumsum(tfs)
-                            parts = [
-                                flat[(ends[i] - tfs[i]):ends[i]]
-                                for i in np.flatnonzero(keep)
-                            ]
-                            flat = (
-                                np.concatenate(parts)
-                                if parts
-                                else np.empty(0, np.int64)
-                            )
-                            doc_ids, tfs = doc_ids[keep], tfs[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "docID": np.repeat(doc_ids, tfs),
-                                "term": term,
-                                "pos": flat,
-                            }
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"), "term": [],
-                     "pos": pd.array([], dtype="int64")}
-                )
-
         if not self.manifest.get("store_positions", True):
             raise ValueError("index built without positions")
-        blocks = self._postings.filter(
-            F.col("term").isin(list(set(terms)))
-        ).select("term", "docs_vb", "tfs_vb", "pos_vb")
-        return self._strip_deleted(blocks.mapInPandas(fn, schema=schema))
+        return self.read_postings(terms, positions=True).select(
+            "docID", "term", F.explode("positions").alias("pos")
+        )
+
+    def _exploded_occurrences(self, terms: list[str], **flags) -> DataFrame:
+        """read_postings with positions plus ``flags``, exploded to one
+        row per occurrence: (docID, term, pos, <one column per array>)."""
+        rows = self.read_postings(terms, positions=True, **flags)
+        arrays = [c for c in rows.columns if c not in ("docID", "term", "tf")]
+        return rows.select(
+            "docID", "term", F.explode(F.arrays_zip(*arrays)).alias("o")
+        ).select("docID", "term", *[F.col(f"o.{c}").alias(c) for c in arrays])
 
     def postings_offsets(self, terms: list[str]) -> DataFrame:
         """Decode occurrence offsets to exploded (docID, term, pos,
@@ -630,68 +621,11 @@ class IndexSearcher:
         original document content."""
         if not self.manifest.get("store_offsets"):
             raise ValueError("index built without offsets")
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("term", StringType()),
-                StructField("pos", LongType()),
-                StructField("start_offset", LongType()),
-                StructField("end_offset", LongType()),
-            ]
+        return self._exploded_occurrences(terms, offsets=True).select(
+            "docID", "term", F.col("positions").alias("pos"),
+            F.col("start_offsets").alias("start_offset"),
+            F.col("end_offsets").alias("end_offset"),
         )
-        dele_bc = self._deleted_bc
-
-        def fn(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for term, docs_vb, tfs_vb, pos_vb, offs_vb, olen_vb in zip(
-                    pdf["term"], pdf["docs_vb"], pdf["tfs_vb"],
-                    pdf["pos_vb"], pdf["offs_vb"], pdf["olen_vb"],
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    pos = segmented_delta_decode(decode(bytes(pos_vb)), tfs)
-                    st = segmented_delta_decode(decode(bytes(offs_vb)), tfs)
-                    ln = decode(bytes(olen_vb))
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        if not keep.all():
-                            ends = np.cumsum(tfs)
-                            idx = np.flatnonzero(keep)
-                            parts = [
-                                np.arange(ends[i] - tfs[i], ends[i])
-                                for i in idx
-                            ]
-                            sel = (
-                                np.concatenate(parts)
-                                if parts
-                                else np.empty(0, np.int64)
-                            )
-                            pos, st, ln = pos[sel], st[sel], ln[sel]
-                            doc_ids, tfs = doc_ids[keep], tfs[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "docID": np.repeat(doc_ids, tfs),
-                                "term": term,
-                                "pos": pos,
-                                "start_offset": st,
-                                "end_offset": st + ln,
-                            }
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"), "term": [],
-                     "pos": pd.array([], dtype="int64"),
-                     "start_offset": pd.array([], dtype="int64"),
-                     "end_offset": pd.array([], dtype="int64")}
-                )
-
-        blocks = self._postings.filter(
-            F.col("term").isin(list(set(terms)))
-        ).select("term", "docs_vb", "tfs_vb", "pos_vb", "offs_vb", "olen_vb")
-        return self._strip_deleted(blocks.mapInPandas(fn, schema=schema))
 
     def postings_payloads(self, terms: list[str]) -> DataFrame:
         """Decode per-occurrence payloads to exploded (docID, term, pos,
@@ -701,64 +635,10 @@ class IndexSearcher:
         the delimited-payload filter; see index.builder.build_index)."""
         if not self.manifest.get("store_payloads"):
             raise ValueError("index built without payloads")
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("term", StringType()),
-                StructField("pos", LongType()),
-                StructField("payload", LongType()),
-            ]
+        return self._exploded_occurrences(terms, payloads=True).select(
+            "docID", "term", F.col("positions").alias("pos"),
+            F.col("payloads").alias("payload"),
         )
-        dele_bc = self._deleted_bc
-
-        def fn(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for term, docs_vb, tfs_vb, pos_vb, pay_vb in zip(
-                    pdf["term"], pdf["docs_vb"], pdf["tfs_vb"],
-                    pdf["pos_vb"], pdf["pay_vb"],
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    pos = segmented_delta_decode(decode(bytes(pos_vb)), tfs)
-                    pay = decode(bytes(pay_vb))
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        if not keep.all():
-                            ends = np.cumsum(tfs)
-                            idx = np.flatnonzero(keep)
-                            parts = [
-                                np.arange(ends[i] - tfs[i], ends[i])
-                                for i in idx
-                            ]
-                            sel = (
-                                np.concatenate(parts)
-                                if parts
-                                else np.empty(0, np.int64)
-                            )
-                            pos, pay = pos[sel], pay[sel]
-                            doc_ids, tfs = doc_ids[keep], tfs[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "docID": np.repeat(doc_ids, tfs),
-                                "term": term,
-                                "pos": pos,
-                                "payload": pay,
-                            }
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"), "term": [],
-                     "pos": pd.array([], dtype="int64"),
-                     "payload": pd.array([], dtype="int64")}
-                )
-
-        blocks = self._postings.filter(
-            F.col("term").isin(list(set(terms)))
-        ).select("term", "docs_vb", "tfs_vb", "pos_vb", "pay_vb")
-        return self._strip_deleted(blocks.mapInPandas(fn, schema=schema))
 
     def payload_score(
         self, term: str, agg: str = "sum", k: int | None = 10
@@ -775,51 +655,23 @@ class IndexSearcher:
 
         Scale shape: one (term, docID) pair lives in exactly ONE block
         row (blocks partition doc ranges; salt spans and tiered gens own
-        disjoint ranges), so per-block reduceat aggregation is already
+        disjoint ranges), so each posting's payload array is already
         complete per doc — a zero-shuffle map + TakeOrdered plan."""
         if agg not in ("sum", "max", "min", "avg"):
             raise ValueError(f"unknown payload aggregate {agg!r}")
         if not self.manifest.get("store_payloads"):
             raise ValueError("index built without payloads")
-        out_type = "double" if agg == "avg" else "long"
-        dele_bc = self._deleted_bc
-
-        def fn(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for docs_vb, tfs_vb, pay_vb in zip(
-                    pdf["docs_vb"], pdf["tfs_vb"], pdf["pay_vb"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    pay = decode(bytes(pay_vb))
-                    starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-                    if agg == "sum":
-                        sc = np.add.reduceat(pay, starts)
-                    elif agg == "max":
-                        sc = np.maximum.reduceat(pay, starts)
-                    elif agg == "min":
-                        sc = np.minimum.reduceat(pay, starts)
-                    else:  # avg
-                        sc = np.add.reduceat(pay, starts) / tfs
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        doc_ids, sc = doc_ids[keep], sc[keep]
-                    outs.append(
-                        pd.DataFrame({"docID": doc_ids, "payload_score": sc})
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"),
-                     "payload_score": pd.array(
-                         [], dtype="float64" if agg == "avg" else "int64"
-                     )}
-                )
-
-        scored = self._postings.filter(F.col("term") == term).select(
-            "docs_vb", "tfs_vb", "pay_vb"
-        ).mapInPandas(fn, schema=f"docID long, payload_score {out_type}")
-        scored = self._strip_deleted(scored)
+        pay = F.col("payloads")
+        total = F.aggregate(pay, F.lit(0).cast(LongType()), lambda a, x: a + x)
+        value = {
+            "sum": total,
+            "max": F.array_max(pay),
+            "min": F.array_min(pay),
+            "avg": total.cast(DoubleType()) / F.col("tf"),
+        }[agg]
+        scored = self.read_postings([term], payloads=True).select(
+            "docID", value.alias("payload_score")
+        )
         if k is None:  # all matches (caller applies its own tie-break)
             return scored
         return scored.orderBy(
@@ -1299,8 +1151,8 @@ class IndexSearcher:
         """docmap restricted to live docs (the liveDocs bitset applied to
         a doc-major scan): the broadcast tombstone set becomes a broadcast
         anti-join frame; the oversized-set mode reuses the anti-join
-        fallback. Paths that START from postings get liveness from the
-        decode kernels instead — this is for paths that start from the
+        fallback. Paths that START from postings get liveness from
+        read_postings instead — this is for paths that start from the
         docmap itself."""
         dm = self.docmap
         if self._deleted.size:
@@ -1454,44 +1306,8 @@ class IndexSearcher:
         present = [t for t in terms if t in stats]
         if not present:
             return self._empty_topk()
-        blocks = self._postings.filter(F.col("term").isin(present)).select(
-            "docs_vb", "tfs_vb", "norms_b"
-        )
         cache = self.scorer.cache
-
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("tf", LongType()),
-                StructField("norm", IntegerType()),
-            ]
-        )
-
-        dele_bc = self._deleted_bc
-
-        def decode_rows(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for docs_vb, tfs_vb, norms_b in zip(
-                    pdf["docs_vb"], pdf["tfs_vb"], pdf["norms_b"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    norms = np.frombuffer(bytes(norms_b), dtype=np.uint8)
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        doc_ids, tfs, norms = doc_ids[keep], tfs[keep], norms[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {"docID": doc_ids, "tf": tfs, "norm": norms.astype(np.int32)}
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"), "tf": pd.array([], dtype="int64"), "norm": pd.array([], dtype="int32")}
-                )
-
-        rows = self._strip_deleted(blocks.mapInPandas(decode_rows, schema=schema))
+        rows = self.read_postings(present, norms=True)
         # df of the pseudo-term (|union of doc sets|) gates the weight, so
         # two actions touch `merged` — persist the NARROW (docID, tf,
         # norm) aggregate so the block decode + groupBy run exactly once
@@ -1604,51 +1420,13 @@ class IndexSearcher:
         if not live_slots:
             return self._empty_topk()
         n_slots = len(live_slots)
-        blocks = self._postings.filter(
-            F.col("term").isin(list(term_slot))
-        ).select("term", "docs_vb", "tfs_vb", "norms_b")
         cache = self.scorer.cache
-        dele_bc = self._deleted_bc
-        slot_of = dict(term_slot)
-
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("slot", IntegerType()),
-                StructField("tf", LongType()),
-                StructField("norm", IntegerType()),
-            ]
+        slot_of = F.create_map(
+            *[F.lit(x) for kv in term_slot.items() for x in kv]
         )
-
-        def decode_rows(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for term, docs_vb, tfs_vb, norms_b in zip(
-                    pdf["term"], pdf["docs_vb"], pdf["tfs_vb"], pdf["norms_b"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    norms = np.frombuffer(bytes(norms_b), dtype=np.uint8)
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        doc_ids, tfs, norms = doc_ids[keep], tfs[keep], norms[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "docID": doc_ids,
-                                "slot": np.full(
-                                    len(doc_ids), slot_of[term], dtype=np.int32
-                                ),
-                                "tf": tfs,
-                                "norm": norms.astype(np.int32),
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        rows = self._strip_deleted(blocks.mapInPandas(decode_rows, schema=schema))
+        rows = self.read_postings(list(term_slot), norms=True).withColumn(
+            "slot", slot_of[F.col("term")].cast(IntegerType())
+        )
         # same persist rationale as search_synonym: the narrow
         # (docID, slot, tf, norm) aggregate feeds both the per-slot df
         # count and the scoring pass
@@ -1709,9 +1487,9 @@ class IndexSearcher:
         SEARCHER citizen (KnnFloatVectorQuery.java:48 +
         DocIdSetIterator liveDocs semantics): deleted docs never
         surface — the Arrow-batched scoring kernel drops the broadcast
-        tombstone set (same contract as every postings decode kernel)
-        and the output additionally passes the anti-join fallback for
-        oversized delete sets. One narrow map + TakeOrdered; the 10^9
+        tombstone set (the contract read_postings keeps for postings)
+        and the output passes the anti-join fallback for oversized
+        delete sets. One narrow map + TakeOrdered; the 10^9
         path is search_ivf (cell-pruned probes into a persisted IVF
         layout)."""
         dele_bc = self._deleted_bc
@@ -2721,9 +2499,9 @@ class IndexSearcher:
                 surviving = blocks.withColumn(
                     "ub", self._block_ub_col(weights)
                 ).filter((F.col("ub") + slack[F.col("term")]) >= F.lit(thr))
-                scored = surviving.select(
-                    "term", "docs_vb", "tfs_vb", "norms_b"
-                ).mapInPandas(self._decode_score_udf(weights), schema=SCORE_SCHEMA)
+                scored = self.read_postings(
+                    terms, weights=weights, blocks=surviving
+                )
                 return self._topk(scored, k, mode, n_terms)
 
         # phase 1 candidates: top blocks per term by ub, covering >= k docs.
@@ -2763,11 +2541,7 @@ class IndexSearcher:
         # the whole pruned search is ONE action: Spark evaluates the two
         # broadcast subtrees (cand_keys, theta) then the main scan.
         cand = blocks.join(F.broadcast(cand_keys), key_cols)
-        scored1 = self._strip_deleted(
-            cand.select("term", "docs_vb", "tfs_vb", "norms_b").mapInPandas(
-                self._decode_score_udf(weights), schema=SCORE_SCHEMA
-            )
-        )
+        scored1 = self.read_postings(terms, weights=weights, blocks=cand)
         theta_df = (
             self._topk(scored1, k, mode, n_terms)
             .agg(F.min("score").alias("m"), F.count("*").alias("c"))
@@ -2790,11 +2564,7 @@ class IndexSearcher:
             .crossJoin(F.broadcast(theta_df))
             .filter((F.col("ub") + slack[F.col("term")]) >= thr)
         )
-        scored = self._strip_deleted(
-            surviving.select("term", "docs_vb", "tfs_vb", "norms_b").mapInPandas(
-                self._decode_score_udf(weights), schema=SCORE_SCHEMA
-            )
-        )
+        scored = self.read_postings(terms, weights=weights, blocks=surviving)
         return self._topk(scored, k, mode, n_terms)
 
     # -- phrase queries ---------------------------------------------------
@@ -2839,7 +2609,9 @@ class IndexSearcher:
             bcast = stats[uniq_terms[order[0]]].df <= self.PHRASE_BROADCAST_DF
         joined = None
         for i in order:
-            side = self._positions_side(uniq_terms[i]).select(
+            side = self.read_postings(
+                [uniq_terms[i]], positions=True, norms=True
+            ).select(
                 "docID",
                 # any side can provide norm (same doc => same norm byte);
                 # take it from the first-joined (rarest) side
@@ -2854,7 +2626,7 @@ class IndexSearcher:
                 joined = side.join(F.broadcast(joined), "docID")
             else:
                 joined = joined.join(side, "docID")
-        return self._strip_deleted(joined)
+        return joined
 
     def _clause_positions_side(self, clause: tuple[str, ...]) -> DataFrame:
         """(docID, norm, positions) rows for a SPAN CLAUSE — a single
@@ -2866,15 +2638,16 @@ class IndexSearcher:
         member terms are disjoint by construction (one token per
         position), so the merge is flatten + sort with no dedup.
 
-        Plan shape: ONE postings scan of all member terms through the
-        map-only positions kernel, at any expansion width (a union of
+        Plan shape: ONE postings scan of all member terms through
+        read_postings, at any expansion width (a union of
         per-term scans grows the plan with the expansion); the merge is
         ONE partial-aggregated groupBy over only the clause terms'
         postings rows — cost bounded by the clause's summed df, never
         the corpus."""
+        rows = self.read_postings(list(clause), positions=True, norms=True)
         if len(clause) == 1:
-            return self._positions_side(clause[0])
-        return self._positions_side(*clause).groupBy("docID").agg(
+            return rows
+        return rows.groupBy("docID").agg(
             F.first("norm").alias("norm"),
             F.array_sort(F.flatten(F.collect_list("positions"))).alias(
                 "positions"
@@ -2910,60 +2683,7 @@ class IndexSearcher:
                 joined = side.join(F.broadcast(joined), "docID")
             else:
                 joined = joined.join(side, "docID")
-        return self._strip_deleted(joined)
-
-    def _positions_side(self, *terms: str) -> DataFrame:
-        """The terms' postings decoded to (docID, norm, positions) rows,
-        one row per (term, doc), with the tombstone set applied INSIDE
-        the decode kernel (the decode-kernel liveness contract — every
-        new kernel captures self._deleted_bc and filters before
-        emitting)."""
-        pos_row_schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("norm", IntegerType()),
-                StructField("positions", ArrayType(LongType())),
-            ]
-        )
-
-        dele_bc = self._deleted_bc
-
-        def decode_positions(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                frames = []
-                for docs_vb, tfs_vb, norms_b, pos_vb in zip(
-                    pdf["docs_vb"], pdf["tfs_vb"], pdf["norms_b"], pdf["pos_vb"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    norms = np.frombuffer(bytes(norms_b), dtype=np.uint8)
-                    flat = segmented_delta_decode(decode(bytes(pos_vb)), tfs)
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        if not keep.all():
-                            ends = np.cumsum(tfs)
-                            parts = [flat[(ends[i] - tfs[i]):ends[i]] for i in np.flatnonzero(keep)]
-                            flat = np.concatenate(parts) if parts else np.empty(0, np.int64)
-                            doc_ids, tfs, norms = doc_ids[keep], tfs[keep], norms[keep]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "docID": doc_ids,
-                                "norm": norms.astype(np.int32),
-                                "positions": np.split(flat, np.cumsum(tfs)[:-1]),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"), "norm": pd.array([], dtype="int32"), "positions": []}
-                )
-
-        return (
-            self._postings.filter(F.col("term").isin(list(terms)))
-            .select("docs_vb", "tfs_vb", "norms_b", "pos_vb")
-            .mapInPandas(decode_positions, schema=pos_row_schema)
-        )
+        return joined
 
     def phrase_scores(self, terms: list[str]) -> DataFrame | None:
         """Full (docID, score float32) set for an exact phrase, or None if
@@ -3109,7 +2829,7 @@ class IndexSearcher:
         joined = self._phrase_join(uniq_terms, stats)
         has_exclude = exclude is not None and exclude in stats
         if has_exclude:
-            xside = self._positions_side(exclude).select(
+            xside = self.read_postings([exclude], positions=True).select(
                 "docID", F.col("positions").alias("xpos")
             )
             joined = joined.join(xside, "docID", "left")
@@ -3702,7 +3422,7 @@ class IndexSearcher:
         weight = float(w)
         cache = self.scorer.cache
 
-        rows = self._tf_norm_rows(present)
+        rows = self.read_postings(present, norms=True)
         agg = rows.groupBy("docID").agg(
             F.sum("tf").alias("freq"), F.max("norm").alias("norm")
         )
@@ -3722,60 +3442,6 @@ class IndexSearcher:
             )
             .orderBy(F.desc("score"), F.asc("docID"))
             .limit(k)
-        )
-
-    def _tf_norm_rows(self, terms: list[str]) -> DataFrame:
-        """Decode (docID, term, tf, norm) rows for the given terms — the
-        postings_tf shape plus the norm byte, for scorers that need the
-        RAW tf (span-or's freq sums before saturation; the multi-index
-        searcher's shard-local decode). Tombstones are filtered inside
-        the kernel per the decode-kernel contract."""
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("term", StringType()),
-                StructField("tf", LongType()),
-                StructField("norm", IntegerType()),
-            ]
-        )
-        dele_bc = self._deleted_bc
-
-        def fn(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for term, docs_vb, tfs_vb, norms_b in zip(
-                    pdf["term"], pdf["docs_vb"], pdf["tfs_vb"], pdf["norms_b"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    norms = np.frombuffer(bytes(norms_b), dtype=np.uint8)
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        doc_ids, tfs, norms = doc_ids[keep], tfs[keep], norms[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "docID": doc_ids,
-                                "term": term,
-                                "tf": tfs.astype(np.int64),
-                                "norm": norms.astype(np.int32),
-                            }
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {
-                        "docID": pd.array([], dtype="int64"),
-                        "term": pd.array([], dtype="object"),
-                        "tf": pd.array([], dtype="int64"),
-                        "norm": pd.array([], dtype="int32"),
-                    }
-                )
-
-        return self._strip_deleted(
-            self._postings.filter(F.col("term").isin(list(set(terms))))
-            .select("term", "docs_vb", "tfs_vb", "norms_b")
-            .mapInPandas(fn, schema=schema)
         )
 
     def match_all_scores(self) -> DataFrame:
@@ -4022,16 +3688,9 @@ class IndexSearcher:
         cache = self.scorer.cache
 
         # per-slot (docID, norm, positions-union) via decode + flatten
-        pos_schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("norm", IntegerType()),
-                StructField("positions", ArrayType(LongType())),
-            ]
-        )
         joined = None
         for i, slot in enumerate(alts_present):
-            rows = self._decode_positions_rows(slot, pos_schema)
+            rows = self.read_postings(slot, positions=True, norms=True)
             side = (
                 rows.groupBy("docID")
                 .agg(
@@ -4047,7 +3706,6 @@ class IndexSearcher:
                 )
             )
             joined = side if joined is None else joined.join(side, "docID")
-        joined = self._strip_deleted(joined)
 
         n_slots = len(alts_present)
         out_schema = StructType(
@@ -4156,48 +3814,12 @@ class IndexSearcher:
             for t in present
         }
 
-        schema = StructType(
-            [
-                StructField("docID", LongType()),
-                StructField("term", StringType()),
-                StructField("tf_t", LongType()),
-                StructField("tf_b", LongType()),
-            ]
-        )
-        dele_bc = self._deleted_bc
-
-        def decode_split(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                outs = []
-                for term, docs_vb, tfs_vb, pos_vb in zip(
-                    pdf["term"], pdf["docs_vb"], pdf["tfs_vb"], pdf["pos_vb"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    flat = segmented_delta_decode(decode(bytes(pos_vb)), tfs)
-                    starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-                    in_title = (flat < tl).astype(np.int64)
-                    tf_t = np.add.reduceat(in_title, starts) if flat.size else np.zeros(0, np.int64)
-                    tf_b = tfs - tf_t
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        doc_ids, tf_t, tf_b = doc_ids[keep], tf_t[keep], tf_b[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {"docID": doc_ids, "term": term, "tf_t": tf_t, "tf_b": tf_b}
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"), "term": [],
-                     "tf_t": pd.array([], dtype="int64"),
-                     "tf_b": pd.array([], dtype="int64")}
-                )
-
-        rows = self._strip_deleted(
-            self._postings.filter(F.col("term").isin(present))
-            .select("term", "docs_vb", "tfs_vb", "pos_vb")
-            .mapInPandas(decode_split, schema=schema)
+        # title/body split of each posting's tf: one Catalyst pass over
+        # its positions array
+        tf_t = F.size(F.filter("positions", lambda q: q < F.lit(tl)))
+        rows = self.read_postings(present, positions=True).select(
+            "docID", "term", tf_t.alias("tf_t"),
+            (F.col("tf") - tf_t).alias("tf_b"),
         )
         rows = rows.join(self.docmap.select("docID", "dl"), "docID")
 
@@ -4233,56 +3855,6 @@ class IndexSearcher:
 
         scored = rows.mapInPandas(score_rows, schema=out_schema)
         return self._topk(scored, k, "or", n_terms=len(present))
-
-    def _decode_positions_rows(self, terms: list[str], pos_schema) -> DataFrame:
-        """(docID, norm, positions) rows for each (term, doc) posting of
-        `terms` — shared decode for multi-phrase / intervals."""
-        dele_bc = self._deleted_bc
-
-        def decode_positions(batches):
-            dele = dele_bc.value
-            for pdf in batches:
-                frames = []
-                for docs_vb, tfs_vb, norms_b, pos_vb in zip(
-                    pdf["docs_vb"], pdf["tfs_vb"], pdf["norms_b"], pdf["pos_vb"]
-                ):
-                    doc_ids = delta_decode(decode(bytes(docs_vb)))
-                    tfs = decode(bytes(tfs_vb))
-                    norms = np.frombuffer(bytes(norms_b), dtype=np.uint8)
-                    flat = segmented_delta_decode(decode(bytes(pos_vb)), tfs)
-                    if dele.size:
-                        keep = ~np.isin(doc_ids, dele)
-                        if not keep.all():
-                            ends = np.cumsum(tfs)
-                            parts = [
-                                flat[(ends[i] - tfs[i]):ends[i]]
-                                for i in np.flatnonzero(keep)
-                            ]
-                            flat = (
-                                np.concatenate(parts)
-                                if parts
-                                else np.empty(0, np.int64)
-                            )
-                            doc_ids, tfs, norms = doc_ids[keep], tfs[keep], norms[keep]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "docID": doc_ids,
-                                "norm": norms.astype(np.int32),
-                                "positions": np.split(flat, np.cumsum(tfs)[:-1]),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(
-                    {"docID": pd.array([], dtype="int64"),
-                     "norm": pd.array([], dtype="int32"), "positions": []}
-                )
-
-        return (
-            self._postings.filter(F.col("term").isin(list(set(terms))))
-            .select("docs_vb", "tfs_vb", "norms_b", "pos_vb")
-            .mapInPandas(decode_positions, schema=pos_schema)
-        )
 
     # -- interval queries (B14) -------------------------------------------
 
@@ -4395,7 +3967,7 @@ class IndexSearcher:
                 nc_idx = uniq.index(nc)
             else:
                 nc_idx = len(uniq)
-                nc_side = self._positions_side(nc).select(
+                nc_side = self.read_postings([nc], positions=True).select(
                     "docID", F.col("positions").alias(f"pos{nc_idx}")
                 )
                 joined = joined.join(nc_side, "docID", "left")

@@ -11,9 +11,9 @@ holds it), docIDs are shard-local plus a docBase offset, and the final
 top-k is a merge of per-shard top-ks with the (score DESC, docID ASC)
 tie-break.
 
-Spark shape: shard postings decode with the per-shard tombstone-aware
-kernel (each shard's decode prunes to the query terms via its own
-parquet stats), union — no shuffle until the single groupBy(docID) that
+Spark shape: each shard's postings come from its own read_postings
+(tombstones applied per shard; each scan prunes to the query terms via
+the shard's own parquet stats), union — no shuffle until the single groupBy(docID) that
 sums per-term scores, and the top-k is TakeOrderedAndProject (the
 per-partition-heap + k-row-merge that IS TopDocs.merge). Global stats
 come from the manifests (doc counts, total term freq) and a summed
@@ -117,7 +117,7 @@ class MultiIndexSearcher:
 
         parts = []
         for s, base in zip(self.searchers, self.bases):
-            rows = s._tf_norm_rows(present)
+            rows = s.read_postings(present, norms=True)
             if base:
                 rows = rows.withColumn("docID", F.col("docID") + F.lit(base))
             parts.append(rows)

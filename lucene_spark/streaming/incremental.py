@@ -31,7 +31,6 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,7 +51,7 @@ from lucene_spark.index.builder import (
     _with_range_id,
     merge_postings,
 )
-from lucene_spark.index.deletes import drop_deleted_docs
+from lucene_spark.index.deletes import drop_deleted_docs, term_stats_from_blocks
 from lucene_spark.index.resumable import _atomic_json
 
 
@@ -339,39 +338,14 @@ def _compact_gens(
         os.path.join(out_dir, "postings", f"gen={gen_name}")
     )
     if has_deletes:
-        # per-gen stats must reflect the dropped docs: recompute from the
-        # surviving blocks (df/max_tf/min_norm from headers, cf from one
-        # tfs decode pass) instead of summing the stale per-gen stats
-        new_posts = spark.read.parquet(
-            os.path.join(out_dir, "postings", f"gen={gen_name}")
-        )
-        base = new_posts.groupBy("term").agg(
-            F.sum("ndocs").cast("long").alias("df"),
-            F.max("max_tf").alias("max_tf"),
-            F.min("min_norm").alias("min_norm"),
-        )
-
-        def cf_rows(batches):
-            for pdf in batches:
-                terms, cfs = [], []
-                for term, tfs_vb in zip(pdf["term"], pdf["tfs_vb"]):
-                    terms.append(term)
-                    cfs.append(int(decode(bytes(tfs_vb)).sum()))
-                yield pd.DataFrame(
-                    {"term": terms, "cf": pd.array(cfs, dtype="int64")}
-                )
-
-        cf_df = (
-            new_posts.select("term", "tfs_vb")
-            .mapInPandas(cf_rows, schema="term string, cf long")
-            .groupBy("term")
-            .agg(F.sum("cf").alias("cf"))
-        )
-        (
-            base.join(cf_df, "term")
-            .select("term", "df", "cf", "max_tf", "min_norm")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "terms_gens", f"gen={gen_name}"))
+        # per-gen stats must reflect the dropped docs: recompute them from
+        # the surviving blocks instead of summing the stale per-gen stats
+        term_stats_from_blocks(
+            spark.read.parquet(
+                os.path.join(out_dir, "postings", f"gen={gen_name}")
+            )
+        ).write.mode("overwrite").parquet(
+            os.path.join(out_dir, "terms_gens", f"gen={gen_name}")
         )
         return
     tpaths = [os.path.join(out_dir, "terms_gens", f"gen={g['gen']}") for g in group]

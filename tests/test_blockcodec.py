@@ -1,17 +1,16 @@
-"""Adaptive block codec contract (ForUtil/PForUtil analog): round-trip
-for both wire formats, header dispatch, exception patching, and the
-never-larger-than-LEB guarantee."""
+"""Block codec contract: LEB128 round-trip behind the 1-byte header,
+header dispatch, and the batched encode_blocks / decode_blocks paths
+byte-identical to per-payload encode_block / decode_block."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
 
 from lucene_spark.util.blockcodec import (
     _LEB,
-    _MAX_EXCEPTIONS,
-    _PACKED,
     decode_block,
+    decode_blocks,
     encode_block,
+    encode_blocks,
 )
 from lucene_spark.util.varbyte import encode as leb_encode
 
@@ -21,66 +20,39 @@ def test_empty():
     assert decode_block(b"").size == 0
 
 
-@pytest.mark.parametrize("packed", [False, True])
+@pytest.mark.parametrize("batched", [False, True])
 @pytest.mark.parametrize("seed", range(6))
-def test_random_roundtrip(packed, seed):
+def test_random_roundtrip(batched, seed):
+    """Per payload, or (batched) many payloads at once through
+    encode_blocks / decode_blocks, which must match per-payload
+    encode_block byte for byte."""
     rng = np.random.default_rng(seed)
+    arrays = []
     for _ in range(50):
-        n = int(rng.integers(1, 400))
-        kind = int(rng.integers(0, 4))
+        n = int(rng.integers(0 if batched else 1, 400))
+        kind = int(rng.integers(0, 3))
         if kind == 0:
             v = rng.integers(0, 2, n)
         elif kind == 1:
             v = rng.integers(0, 1 << 20, n)
-        elif kind == 2:
-            v = rng.integers(0, 16, n)
-            k = min(_MAX_EXCEPTIONS - 2, n)
-            if k:
-                v[rng.integers(0, n, k)] = rng.integers(1 << 30, 1 << 40, k)
         else:
             v = rng.integers(0, 1 << 62, n)
-        got = decode_block(encode_block(v, packed=packed))
-        assert (got == v.astype(np.int64)).all()
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**62), max_size=300))
-@settings(max_examples=60, deadline=None)
-def test_hypothesis_roundtrip_packed(vals):
-    v = np.array(vals, dtype=np.int64)
-    assert (decode_block(encode_block(v, packed=True)) == v).all()
-
-
-def test_uniform_small_ints_pack_smaller_than_leb():
-    rng = np.random.default_rng(1)
-    v = rng.integers(0, 128, 256)
-    out = encode_block(v, packed=True)
-    assert out[0] == _PACKED
-    assert len(out) < len(leb_encode(v)) + 1
-
-
-def test_outliers_use_pfor_exceptions():
-    rng = np.random.default_rng(2)
-    v = rng.integers(0, 16, 256)
-    v[:3] = [1 << 35, 1 << 34, 1 << 33]
-    out = encode_block(v, packed=True)
-    assert out[0] == _PACKED and out[2] == 3  # 3 patched exceptions
-    assert (decode_block(out) == v).all()
-    # a plain FOR at full width would be ~36 bits/value; PFOR stays near 4
-    assert len(out) < 256 * 36 // 8 // 2
-
-
-def test_skewed_payload_falls_back_to_leb():
-    # many huge values: packing cannot beat LEB
-    v = np.full(100, (1 << 60) + 7, dtype=np.int64)
-    v[::2] = 1
-    out = encode_block(v, packed=True)
-    assert decode_block(out).tolist() == v.tolist()
-    assert len(out) <= len(leb_encode(v)) + 1
+        arrays.append(v.astype(np.int64))
+    if not batched:
+        for v in arrays:
+            assert (decode_block(encode_block(v)) == v).all()
+        return
+    counts = np.array([a.size for a in arrays])
+    enc = encode_blocks(np.concatenate(arrays), counts)
+    assert enc == [encode_block(v) for v in arrays]
+    flat, got_counts = decode_blocks(enc)
+    assert (got_counts == counts).all()
+    assert (flat == np.concatenate(arrays)).all()
 
 
 def test_vbyte_mode_emits_leb_header():
     v = np.arange(10)
-    out = encode_block(v, packed=False)
+    out = encode_block(v)
     assert out[0] == _LEB
     assert out[1:] == leb_encode(v)
     assert (decode_block(out) == v).all()
@@ -89,6 +61,10 @@ def test_vbyte_mode_emits_leb_header():
 def test_unknown_tag_rejected():
     with pytest.raises(ValueError, match="unknown block codec"):
         decode_block(b"\x7fjunk")
+    # the batched path checks every payload's header too (0x02 was the
+    # deleted FOR/PFOR tag)
+    with pytest.raises(ValueError, match="unknown block codec"):
+        decode_blocks([encode_block(np.arange(3)), b"\x02junk"])
 
 
 def test_legacy_manifest_without_codec_fails_fast(spark, built_index, tmp_path):
@@ -115,5 +91,7 @@ def test_legacy_manifest_without_codec_fails_fast(spark, built_index, tmp_path):
         IndexSearcher(spark, legacy)
     with pytest.raises(ValueError, match="not readable"):
         validate_manifest_codec({"codec": "future-v9"})
+    with pytest.raises(ValueError, match="not readable"):
+        validate_manifest_codec({"codec": "groupvint-v1"})
     # the untouched index still opens
     assert IndexSearcher(spark, searcher.index_dir).doc_count > 0
