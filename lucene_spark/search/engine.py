@@ -12,6 +12,9 @@ Spark-first reimagining of IndexSearcher (SURVEY.md §3.2):
     ORDER BY score DESC, docID ASC LIMIT k — Spark's
     TakeOrderedAndProject is Lucene's per-slice HitQueue + TopDocs.merge
     (search/TopDocs.java:203-231, tie-break at HitQueue.java:76-83).
+    Queries with a small summed df run all of it in ONE task (block rows
+    coalesced into one partition: no exchange), as Lucene's
+    TopScoreDocCollector collects one segment.
 
 Score semantics: per-term scores in float32 (BM25Similarity expression
 shape), summed in double, cast back to float32 — matching
@@ -80,7 +83,7 @@ def _list_column(flat: np.ndarray, counts: np.ndarray) -> pd.Series:
 # read_postings output columns: (name, type, enabling flag)
 _READ_COLS = (
     ("docID", LongType(), None),
-    ("term", StringType(), None),
+    ("term", StringType(), "unscored"),
     ("tf", LongType(), None),
     ("norm", IntegerType(), "norms"),
     ("score", FloatType(), "weights"),
@@ -135,6 +138,14 @@ class IndexSearcher:
     # all: read_postings strips deleted docs with an anti-join instead
     # (10^9 deletes would be a multi-GB broadcast)
     ANTIJOIN_DELETES_THRESHOLD = 5_000_000
+
+    # BM25 top-k over at most this many postings (the summed df of the
+    # query terms) runs inside one task (_bm25_topk): one job, one stage,
+    # no exchange. Above it the shuffle plan (_topk, _search_pruned)
+    # spreads decode and scoring over the cores. Set at the measured
+    # wall-time crossover of the two plans on a 4-core host (CHANGES.md);
+    # with more cores the shuffle plan wins earlier.
+    ONE_TASK_TOPK_MAX_DF = 1_000_000
 
     def reload_deletes(self) -> int:
         """Load the tombstone set (PendingDeletes bitset analog). Small
@@ -492,7 +503,8 @@ class IndexSearcher:
         (every term when None) — PostingsEnum with the FREQS / POSITIONS /
         OFFSETS / PAYLOADS flags (reference lucene/core/src/java/org/
         apache/lucene/index/PostingsEnum.java:38-58). Columns: docID,
-        term, tf, then per flag
+        term (left out of scored reads: no score consumer reads it), tf,
+        then per flag
         - ``norms``: norm (the doc's length byte);
         - ``weights`` (term -> BM25 weight): score, float32 in Lucene's
           exact expression shape w - w / (1 + tf * cache[norm]);
@@ -518,6 +530,7 @@ class IndexSearcher:
                     F.col("term").isin(list(dict.fromkeys(terms)))
                 )
         flags = {
+            "unscored": weights is None,
             "norms": norms, "weights": weights is not None,
             "positions": positions, "offsets": offsets, "payloads": payloads,
         }
@@ -541,11 +554,10 @@ class IndexSearcher:
                 if dele.size:
                     p = keep_postings(p, ~np.isin(p["docs"], dele))
                 nd, tfs = p["ndocs"], p["tfs"]
-                out = {
-                    "docID": p["docs"],
-                    "term": np.repeat(pdf["term"].to_numpy(), nd),
-                    "tf": tfs,
-                }
+                out = {"docID": p["docs"]}
+                if weights is None:
+                    out["term"] = np.repeat(pdf["term"].to_numpy(), nd)
+                out["tf"] = tfs
                 if norms:
                     out["norm"] = p["norms"].astype(np.int32)
                 if weights is not None:
@@ -575,11 +587,11 @@ class IndexSearcher:
         stats: dict[str, TermStats],
         weights: dict[str, float] | None = None,
     ) -> DataFrame:
-        """(docID, term, tf, score) rows for every posting of the query
-        terms (stats may cover a superset of terms — only `terms` are
-        scored). `weights` overrides the per-term idf weight
-        (BlendedTermQuery scores every term with an artificial blended
-        df)."""
+        """(docID, tf, score) rows for every posting of the query terms
+        (scored reads leave out ``term``; stats may cover a superset of
+        terms — only `terms` are scored). `weights` overrides the
+        per-term idf weight (BlendedTermQuery scores every term with an
+        artificial blended df)."""
         if weights is None:
             weights = {
                 t: w for t, w in self._weights(stats).items() if t in set(terms)
@@ -716,7 +728,22 @@ class IndexSearcher:
         mode='or'  -> BooleanQuery of SHOULD clauses (sum of scores)
         mode='and' -> BooleanQuery of MUST clauses (leapfrog == count filter)
         prune=True -> block-max WAND pruning (score-safe; see
-                      search_pruned for the bound derivation)
+                      _search_pruned for the bound derivation)
+
+        Two plans, picked by the summed df of the query terms (known
+        from the term dictionary before any postings are read):
+        - at most ONE_TASK_TOPK_MAX_DF postings: one job, one stage, one
+          task — the block rows are coalesced into one partition, so
+          decode, score, the per-doc sum and the top k run in one task
+          with no exchange. prune=True takes this plan too: the
+          top k is the same, and pruning's bootstrap jobs cost more than
+          the decode they could save at this size;
+        - above it, or when tombstones are too many to broadcast (the
+          anti-join mode of read_postings): the shuffle plan — a
+          groupBy(docID) sum (skipped for a single term) and a
+          TakeOrdered top k; prune=True runs the block-max pruned
+          search, one job on its fast path (lb_key10 floor) and several
+          when it bootstraps theta (AND mode, k > 10, or deletes).
 
         CONTRACT: repeated query terms score ONCE (deduplicated) — the
         oracle dedups identically; Lucene's BooleanQuery would keep
@@ -733,12 +760,11 @@ class IndexSearcher:
         )
         stats = self.term_stats(terms)
         present = [t for t in terms if t in stats]
-        if not present or (mode == "and" and len(present) < len(set(terms))):
+        if not present or (
+            mode == "and" and len(set(present)) < len(set(terms))
+        ):
             return self._empty_topk()
-        if prune:
-            return self._search_pruned(present, stats, k, mode)
-        scored = self._scored_postings(present, stats)
-        return self._topk(scored, k, mode, n_terms=len(set(present)))
+        return self._bm25_topk(present, stats, k, mode, prune)
 
     def search_boolean(
         self,
@@ -2121,8 +2147,7 @@ class IndexSearcher:
         present = [t for t in terms if t in stats]
         if not present:
             return self._empty_topk()
-        scored = self._scored_postings(present, stats)
-        return self._topk(scored, k, "or", n_terms=len(present))
+        return self._bm25_topk(present, stats, k, "or")
 
     def more_like_this(
         self,
@@ -2148,8 +2173,7 @@ class IndexSearcher:
         present = [t for t in terms if t in stats]
         if not present:
             return self._empty_topk()
-        scored = self._scored_postings(present, stats)
-        return self._topk(scored, k, "or", n_terms=len(present))
+        return self._bm25_topk(present, stats, k, "or")
 
     def explain(
         self, query: str | list[str], k: int = 10, mode: str = "or"
@@ -2401,22 +2425,62 @@ class IndexSearcher:
             )
         )
 
+    def _bm25_topk(
+        self,
+        terms: list[str],
+        stats: dict[str, TermStats],
+        k: int,
+        mode: str,
+        prune: bool = False,
+    ) -> DataFrame:
+        """Top-k of the BM25 term/OR/AND query over ``terms`` (all in
+        ``stats``; repeats score once) in the plan search() describes:
+        one task up to ONE_TASK_TOPK_MAX_DF postings while the tombstones
+        are broadcast, the shuffle plan otherwise. Both plans are the
+        same read_postings + _topk; the one-task plan only coalesces the
+        block rows into one partition first. One partition already meets
+        groupBy(docID)'s distribution and the top-k ordering, so Spark
+        plans no exchange: scan, decode, score, per-doc sum and
+        TakeOrdered run in one task."""
+        terms = list(dict.fromkeys(terms))
+        one_task = (
+            self._tombstones is None
+            and sum(stats[t].df for t in terms) <= self.ONE_TASK_TOPK_MAX_DF
+        )
+        if prune and not one_task:
+            return self._search_pruned(terms, stats, k, mode)
+        blocks = None
+        if one_task:
+            blocks = self._postings.filter(F.col("term").isin(terms)).coalesce(1)
+        scored = self.read_postings(
+            terms, weights=self._weights({t: stats[t] for t in terms}),
+            blocks=blocks,
+        )
+        return self._topk(scored, k, mode, n_terms=len(terms))
+
     def _topk(
         self, scored: DataFrame, k: int, mode: str, n_terms: int
     ) -> DataFrame:
-        agg = scored.groupBy("docID").agg(
-            F.sum(F.col("score").cast(DoubleType())).alias("dsum"),
-            F.count("*").alias("nmatch"),
-        )
-        if mode == "and":
-            agg = agg.filter(F.col("nmatch") == n_terms)
-        return (
-            agg.select(
+        """Top-k of (docID, score) rows holding one float32 score per
+        (doc, term): per-doc double sums (AND mode: docs matching all
+        ``n_terms``), cast to float32, ordered score DESC, docID ASC. A
+        single term needs no groupBy(docID): one (term, doc) posting
+        lives in exactly one block row, so its score IS the doc score
+        (the float32 -> double -> float32 round trip is exact) and the
+        plan is one job with no exchange."""
+        if n_terms == 1:
+            top = scored.select("docID", "score")
+        else:
+            agg = scored.groupBy("docID").agg(
+                F.sum(F.col("score").cast(DoubleType())).alias("dsum"),
+                F.count("*").alias("nmatch"),
+            )
+            if mode == "and":
+                agg = agg.filter(F.col("nmatch") == n_terms)
+            top = agg.select(
                 "docID", F.col("dsum").cast(FloatType()).alias("score")
             )
-            .orderBy(F.desc("score"), F.asc("docID"))
-            .limit(k)
-        )
+        return top.orderBy(F.desc("score"), F.asc("docID")).limit(k)
 
     # -- block-max pruned top-k (WAND analog) -----------------------------
 

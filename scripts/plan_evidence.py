@@ -44,13 +44,28 @@ def main() -> None:
     ))
 
     topk = s.search(["table", "scan"], k=10, mode="or")
+    p = _plan(topk, head=12)
     sections.append((
-        "OR top-10 — map-side partial aggregate, single exchange, TakeOrderedAndProject",
+        "OR top-10 under ONE_TASK_TOPK_MAX_DF — one task, no Exchange",
+        "The block rows are coalesced into one partition, which already meets the aggregate's distribution "
+        "and the top-k ordering: decode, score, per-doc sum and TakeOrderedAndProject run in one task.",
+        p,
+    ))
+    assert "Exchange" not in p, "one-task top-k grew a shuffle!"
+
+    # the shuffle plan, taken above the bound
+    from lucene_spark.search.engine import IndexSearcher
+
+    s_shuffle = IndexSearcher(spark, s.index_dir)
+    s_shuffle.ONE_TASK_TOPK_MAX_DF = 0
+    topk = s_shuffle.search(["table", "scan"], k=10, mode="or")
+    sections.append((
+        "OR top-10 above the bound — map-side partial aggregate, single exchange, TakeOrderedAndProject",
         "partial_sum before the exchange; top-k is per-partition heaps + k-row merge, never a global sort.",
         _plan(topk, head=12),
     ))
 
-    pruned = s.search(["table", "scan", "spark"], k=10, mode="or", prune=True)
+    pruned = s_shuffle.search(["table", "scan", "spark"], k=10, mode="or", prune=True)
     sections.append((
         "Pruned BM25 top-10 (fast path) — ONE job, ub filter before decode",
         "Theta comes from the terms table (lb_key10), so the plan is the unpruned shape plus a block filter "

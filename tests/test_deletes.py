@@ -101,8 +101,12 @@ def test_antijoin_tombstone_mode(spark, idx):
     assert not (ph & victim_ids)
     syn = {r["docID"] for r in s.search_synonym(["license", "apache"], k=50).collect()}
     assert not (syn & victim_ids)
-    pr = [(r["docID"], r["score"]) for r in s.search("license apache", k=10, prune=True).collect()]
-    assert pr == after[:10]
+    # anti-join mode keeps the shuffle plan at any ONE_TASK_TOPK_MAX_DF,
+    # so prune=True reaches the block-max pruned search under both
+    for bound in (IndexSearcher.ONE_TASK_TOPK_MAX_DF, 0):
+        s.ONE_TASK_TOPK_MAX_DF = bound
+        pr = [(r["docID"], r["score"]) for r in s.search("license apache", k=10, prune=True).collect()]
+        assert pr == after[:10]
 
 
 def test_update_documents_incremental(spark, tmp_path):

@@ -7,6 +7,12 @@ import pytest
 
 from lucene_spark.analysis import analyze
 from lucene_spark.oracle import assert_rank_identical
+from lucene_spark.search.engine import IndexSearcher
+
+# ONE_TASK_TOPK_MAX_DF per BM25 top-k plan of search(): the one-task plan
+# (default) and the shuffle plan (0), where prune=True reaches the
+# block-max pruned search; the pruning tests run under both
+PLAN_BOUNDS = (IndexSearcher.ONE_TASK_TOPK_MAX_DF, 0)
 
 BOOL_QUERIES = [
     ("license", "or"),
@@ -64,9 +70,14 @@ def test_phrase_rank_identity(built_index, ph):
 def test_pruned_equals_unpruned(built_index, q):
     """Block-max pruning must never change the top-k (WAND contract)."""
     _, _, searcher = built_index
-    got_p = [(r["docID"], r["score"]) for r in searcher.search(q, k=10, prune=True).collect()]
-    got_u = [(r["docID"], r["score"]) for r in searcher.search(q, k=10).collect()]
-    assert_rank_identical(got_u, got_p, msg=f"[prune {q}]")
+    try:
+        for bound in PLAN_BOUNDS:
+            searcher.ONE_TASK_TOPK_MAX_DF = bound
+            got_p = [(r["docID"], r["score"]) for r in searcher.search(q, k=10, prune=True).collect()]
+            got_u = [(r["docID"], r["score"]) for r in searcher.search(q, k=10).collect()]
+            assert_rank_identical(got_u, got_p, msg=f"[prune {q} bound={bound}]")
+    finally:
+        del searcher.ONE_TASK_TOPK_MAX_DF
 
 
 def test_pruned_actually_prunes_on_skewed_corpus(spark, tmp_path):
@@ -77,7 +88,6 @@ def test_pruned_actually_prunes_on_skewed_corpus(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from lucene_spark.index.builder import build_index
-    from lucene_spark.search.engine import IndexSearcher
 
     # docID order follows (repo, path, commit); group high-tf docs into
     # the lexicographically-first paths so they fill whole 256-doc blocks
@@ -113,9 +123,11 @@ def test_pruned_actually_prunes_on_skewed_corpus(spark, tmp_path):
     assert total >= 4
     assert surviving < total, f"no blocks pruned ({surviving}/{total})"
 
-    got_p = [(r["docID"], r["score"]) for r in s.search("zoo", k=10, prune=True).collect()]
-    got_u = [(r["docID"], r["score"]) for r in s.search("zoo", k=10).collect()]
-    assert_rank_identical(got_u, got_p, msg="[skewed prune]")
+    for bound in PLAN_BOUNDS:
+        s.ONE_TASK_TOPK_MAX_DF = bound
+        got_p = [(r["docID"], r["score"]) for r in s.search("zoo", k=10, prune=True).collect()]
+        got_u = [(r["docID"], r["score"]) for r in s.search("zoo", k=10).collect()]
+        assert_rank_identical(got_u, got_p, msg=f"[skewed prune bound={bound}]")
 
 
 def test_count(built_index):

@@ -138,8 +138,12 @@ def test_salted_and_multiflush_build_identical(spark, tmp_path, oneshot):
         exp = [(r["docID"], r["score"]) for r in s_ref.search(q, k=10, mode=mode).collect()]
         got = [(r["docID"], r["score"]) for r in s_alt.search(q, k=10, mode=mode).collect()]
         assert exp == got, f"{q} {mode}"
-        got_p = [(r["docID"], r["score"]) for r in s_alt.search(q, k=10, mode=mode, prune=True).collect()]
-        assert exp == got_p, f"{q} {mode} pruned-on-salted"
+        # pruned under both top-k plans: one-task (default bound) and
+        # shuffle (bound 0, the block-max pruned search)
+        for bound in (IndexSearcher.ONE_TASK_TOPK_MAX_DF, 0):
+            s_alt.ONE_TASK_TOPK_MAX_DF = bound
+            got_p = [(r["docID"], r["score"]) for r in s_alt.search(q, k=10, mode=mode, prune=True).collect()]
+            assert exp == got_p, f"{q} {mode} pruned-on-salted bound={bound}"
 
     # doc-level invariants survive the salted/multiflush path
     assert manifest["doc_count"] == N_DOCS

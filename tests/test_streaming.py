@@ -13,6 +13,11 @@ from lucene_spark.index.builder import build_index
 from lucene_spark.search.engine import IndexSearcher
 from lucene_spark.streaming.incremental import refresh, start_indexing_stream
 
+# ONE_TASK_TOPK_MAX_DF per BM25 top-k plan of search(): the one-task plan
+# (default) and the shuffle plan (0), where prune=True reaches the
+# block-max pruned search; the pruning tests run under both
+PLAN_BOUNDS = (IndexSearcher.ONE_TASK_TOPK_MAX_DF, 0)
+
 N_DOCS = 300
 N_CHUNKS = 3
 
@@ -227,16 +232,18 @@ def test_pruned_search_on_multi_gen_index(spark, tmp_path):
         s._terms.filter((F.col("df") >= 30) & (F.col("df") <= 45))
         .orderBy("term").limit(1).collect()[0]["term"]
     )
-    for query, mode, k in [
-        ([rare], "or", 20),
-        ("return value table", "or", 10),
-        ("return value", "or", 3),
-        ("value table", "and", 10),
-    ]:
-        exp = [(r["docID"], r["score"]) for r in s.search(query, k=k, mode=mode).collect()]
-        got = [(r["docID"], r["score"])
-               for r in s.search(query, k=k, mode=mode, prune=True).collect()]
-        assert got == exp, f"pruned != unpruned for {query!r} mode={mode} k={k}"
+    for bound in PLAN_BOUNDS:
+        s.ONE_TASK_TOPK_MAX_DF = bound
+        for query, mode, k in [
+            ([rare], "or", 20),
+            ("return value table", "or", 10),
+            ("return value", "or", 3),
+            ("value table", "and", 10),
+        ]:
+            exp = [(r["docID"], r["score"]) for r in s.search(query, k=k, mode=mode).collect()]
+            got = [(r["docID"], r["score"])
+                   for r in s.search(query, k=k, mode=mode, prune=True).collect()]
+            assert got == exp, f"pruned != unpruned for {query!r} mode={mode} k={k} bound={bound}"
 
 
 def test_lb10_fast_path_on_refreshed_index(spark, tmp_path):
@@ -277,13 +284,15 @@ def test_lb10_fast_path_on_refreshed_index(spark, tmp_path):
         st.lb_key10 is not None for st in stats.values()
     ), "refresh wrote no lb_key10 floors"
 
-    for query in ["return value table", "return value", "table"]:
-        exp = [(r["docID"], r["score"]) for r in s.search(query, k=10).collect()]
-        pruned_df = s.search(query, k=10, prune=True)
-        plan = pruned_df._jdf.queryExecution().toString()
-        assert "Window" not in plan, (
-            "pruned search on a refreshed index still bootstraps "
-            f"(Window subtree present) for {query!r}"
-        )
-        got = [(r["docID"], r["score"]) for r in pruned_df.collect()]
-        assert got == exp, f"fast-path pruned != unpruned for {query!r}"
+    for bound in PLAN_BOUNDS:
+        s.ONE_TASK_TOPK_MAX_DF = bound
+        for query in ["return value table", "return value", "table"]:
+            exp = [(r["docID"], r["score"]) for r in s.search(query, k=10).collect()]
+            pruned_df = s.search(query, k=10, prune=True)
+            plan = pruned_df._jdf.queryExecution().toString()
+            assert "Window" not in plan, (
+                "pruned search on a refreshed index still bootstraps "
+                f"(Window subtree present) for {query!r} bound={bound}"
+            )
+            got = [(r["docID"], r["score"]) for r in pruned_df.collect()]
+            assert got == exp, f"fast-path pruned != unpruned for {query!r} bound={bound}"
