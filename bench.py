@@ -76,12 +76,14 @@ def main() -> None:
         corpus_docs_per_sec = CORPUS_DOCS / corpus_build_sec
 
     # -- 2. sf documents index build + headline queries -------------------
-    idx_dir = gate._index_dir_for(SF_DIR)
     if not skip_build:
-        shutil.rmtree(idx_dir, ignore_errors=True)
-    gate._searchers.pop(SF_DIR, None)
+        sf_tag = os.path.basename(os.path.normpath(SF_DIR))
+        shutil.rmtree(
+            os.path.join(gate.BUILD_DIR, "gate_idx", sf_tag, "docs_df"),
+            ignore_errors=True,
+        )
     t0 = time.time()
-    searcher = gate.searcher_for(spark, SF_DIR)  # builds the index
+    searcher = gate.cached_index(spark, SF_DIR)  # builds the index
     sf_build_sec = time.time() - t0
     sf_doc_count = searcher.manifest["doc_count"]
 

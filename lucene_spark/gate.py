@@ -19,7 +19,11 @@ against the numpy oracle in tests/ (rank-identity contract).
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,17 +46,11 @@ STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "it"]
 # index cache per sf_dir
 # --------------------------------------------------------------------------
 
-_searchers: dict[str, IndexSearcher] = {}
-
 # cached indexes live in .build/ of the checkout this package sits in
 BUILD_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".build"
 )
-
-
-def _index_dir_for(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(BUILD_DIR, "gate_idx", tag)
+KEY_FILE = "CACHE_KEY"
 
 
 def _docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,304 +66,23 @@ def _docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def searcher_for(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    if sf_dir in _searchers:
-        return _searchers[sf_dir]
-    idx_dir = _index_dir_for(sf_dir)
+def _half_docs_df(spark: SparkSession, sf_dir: str, upper: bool) -> DataFrame:
+    """doc_id < n/2 or >= n/2 of _docs_df: the two shards of
+    q_multi_shard_top10, each built as a complete standalone index
+    (nothing global is shared at build time; global stats are the
+    searcher's job, which is the point of that gate)."""
     docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
-
-        from lucene_spark.util.blockcodec import CODEC_NAME
-
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = m.get("doc_count") != n or m.get("codec") != CODEC_NAME
-    if rebuild:
-        build_index(spark, docs, idx_dir, store_positions=True)
-    s = IndexSearcher(spark, idx_dir)
-    _searchers[sf_dir] = s
-    return s
+    lower = F.col("path") < f"{docs.count() // 2:012d}"
+    return docs.where(~lower if upper else lower)
 
 
-_searchers_off: dict[str, IndexSearcher] = {}
+def _lower_half_docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _half_docs_df(spark, sf_dir, upper=False)
 
 
-def searcher_for_offsets(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    """Separate cached index built with store_offsets=True (IndexOptions
-    DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS) AND store_term_vectors=True
-    (the two opt-in payload features share one aux index) — kept apart
-    from the main gate index so the headline build/query benchmarks
-    measure the default positions-only configuration."""
-    if sf_dir in _searchers_off:
-        return _searchers_off[sf_dir]
-    idx_dir = _index_dir_for(sf_dir) + "_off"
-    docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
+def _upper_half_docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _half_docs_df(spark, sf_dir, upper=True)
 
-        from lucene_spark.util.blockcodec import CODEC_NAME
-
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = (
-            m.get("doc_count") != n
-            or m.get("codec") != CODEC_NAME
-            or not m.get("store_offsets")
-            or not m.get("store_term_vectors")
-        )
-    if rebuild:
-        build_index(
-            spark, docs, idx_dir,
-            store_positions=True, store_offsets=True, store_term_vectors=True,
-        )
-    s = IndexSearcher(spark, idx_dir)
-    _searchers_off[sf_dir] = s
-    return s
-
-
-_searchers_stem: dict[str, IndexSearcher] = {}
-
-STEM_FILTERS = ("possessive", "porter")
-STEM_QUERY = ["querying", "merged"]  # surfaces; the index holds stems
-
-
-def searcher_for_stemmed(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    """Third cached index, built with the EnglishAnalyzer-style filter
-    chain (EnglishAnalyzer.java:43: possessive strip + Porter stem) —
-    kept apart from the headline index so default benchmarks measure the
-    StandardAnalyzer configuration."""
-    if sf_dir in _searchers_stem:
-        return _searchers_stem[sf_dir]
-    idx_dir = _index_dir_for(sf_dir) + "_stem"
-    docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
-
-        from lucene_spark.util.blockcodec import CODEC_NAME
-
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = (
-            m.get("doc_count") != n
-            or m.get("codec") != CODEC_NAME
-            or tuple(m.get("token_filters", ())) != STEM_FILTERS
-        )
-    if rebuild:
-        build_index(
-            spark, docs, idx_dir, store_positions=True,
-            token_filters=STEM_FILTERS,
-        )
-    s = IndexSearcher(spark, idx_dir)
-    _searchers_stem[sf_dir] = s
-    return s
-
-
-_searchers_stop: dict[str, IndexSearcher] = {}
-STOP_FILTERS = ("stop_en",)
-
-
-def searcher_for_stop(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    """Aux index built with the StopFilter chain (EnglishAnalyzer's
-    default ENGLISH_STOP_WORDS_SET, EnglishAnalyzer.java:46): stopwords
-    drop from the vocabulary, surviving positions keep their gaps, and
-    dl / norms / collection stats count only emitted tokens — kept apart
-    from the headline index like the stemmed/reverse variants."""
-    if sf_dir in _searchers_stop:
-        return _searchers_stop[sf_dir]
-    idx_dir = _index_dir_for(sf_dir) + "_stop"
-    docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
-
-        from lucene_spark.util.blockcodec import CODEC_NAME
-
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = (
-            m.get("doc_count") != n
-            or m.get("codec") != CODEC_NAME
-            or tuple(m.get("token_filters", ())) != STOP_FILTERS
-        )
-    if rebuild:
-        build_index(
-            spark, docs, idx_dir, store_positions=True,
-            token_filters=STOP_FILTERS,
-        )
-    s = IndexSearcher(spark, idx_dir)
-    _searchers_stop[sf_dir] = s
-    return s
-
-
-_searchers_sh2: dict[str, IndexSearcher] = {}
-SHINGLE_FILTERS = ("shingle_2",)
-
-
-def searcher_for_shingle(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    """Aux index built with the shingle_2 chain (ShingleFilter.java:34,
-    min==max==2, outputUnigrams=False — the dedicated grams/phrase-field
-    deployment): every dictionary term is a space-joined bigram, dl and
-    all collection stats count GRAMS, positions are gram slots. Kept
-    apart from the headline index like the stemmed/stop/reverse
-    variants."""
-    if sf_dir in _searchers_sh2:
-        return _searchers_sh2[sf_dir]
-    idx_dir = _index_dir_for(sf_dir) + "_sh2"
-    docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
-
-        from lucene_spark.util.blockcodec import CODEC_NAME
-
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = (
-            m.get("doc_count") != n
-            or m.get("codec") != CODEC_NAME
-            or tuple(m.get("token_filters", ())) != SHINGLE_FILTERS
-        )
-    if rebuild:
-        build_index(
-            spark, docs, idx_dir, store_positions=True,
-            token_filters=SHINGLE_FILTERS,
-        )
-    s = IndexSearcher(spark, idx_dir)
-    _searchers_sh2[sf_dir] = s
-    return s
-
-
-_searchers_len: dict[str, IndexSearcher] = {}
-LEN_FILTERS = ("length_3_7",)
-
-
-def searcher_for_length(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    """Aux index built with the parameterized LengthFilter chain
-    (LengthFilter.java:28 keep 3 <= len <= 7): both short tokens ('a',
-    'to') and long ones ('licensed', 'database') drop with full
-    position-gap + emitted-dl accounting, and the manifest pins the
-    exact bounds as the plain string 'length_3_7'."""
-    if sf_dir in _searchers_len:
-        return _searchers_len[sf_dir]
-    idx_dir = _index_dir_for(sf_dir) + "_len"
-    docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
-
-        from lucene_spark.util.blockcodec import CODEC_NAME
-
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = (
-            m.get("doc_count") != n
-            or m.get("codec") != CODEC_NAME
-            or tuple(m.get("token_filters", ())) != LEN_FILTERS
-        )
-    if rebuild:
-        build_index(
-            spark, docs, idx_dir, store_positions=True,
-            token_filters=LEN_FILTERS,
-        )
-    s = IndexSearcher(spark, idx_dir)
-    _searchers_len[sf_dir] = s
-    return s
-
-
-_searchers_rev: dict[str, IndexSearcher] = {}
-REV_FILTERS = ("reverse",)
-
-
-def searcher_for_reverse(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    """Aux index built with ReverseStringFilter
-    (analysis/reverse/ReverseStringFilter.java:28) — the classic
-    leading-wildcard recipe: *suffix becomes a dictionary PREFIX, so
-    parquet min/max prunes the terms scan. Kept apart from the headline
-    index like the stemmed/offsets aux indexes."""
-    if sf_dir in _searchers_rev:
-        return _searchers_rev[sf_dir]
-    idx_dir = _index_dir_for(sf_dir) + "_rev"
-    docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
-
-        from lucene_spark.util.blockcodec import CODEC_NAME
-
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = (
-            m.get("doc_count") != n
-            or m.get("codec") != CODEC_NAME
-            or tuple(m.get("token_filters", ())) != REV_FILTERS
-        )
-    if rebuild:
-        build_index(
-            spark, docs, idx_dir, store_positions=True,
-            token_filters=REV_FILTERS,
-        )
-    s = IndexSearcher(spark, idx_dir)
-    _searchers_rev[sf_dir] = s
-    return s
-
-
-_searchers_sh: dict[str, list] = {}
-
-
-def searchers_for_shards(spark: SparkSession, sf_dir: str) -> list[IndexSearcher]:
-    """Two half-corpus indexes (doc_id < n/2 and >=), independently
-    built — the shard fixture for the MultiReader/TopDocs.merge gate.
-    Each shard is a complete standalone index; nothing global is shared
-    at build time (global stats are the SEARCHER's job, which is the
-    point of the test)."""
-    if sf_dir in _searchers_sh:
-        return _searchers_sh[sf_dir]
-    docs = _docs_df(spark, sf_dir)
-    n = docs.count()
-    cut = f"{n // 2:012d}"
-    out = []
-    for i, pred in enumerate(
-        [F.col("path") < cut, F.col("path") >= cut]
-    ):
-        idx_dir = _index_dir_for(sf_dir) + f"_sh{i}"
-        part = docs.where(pred)
-        np_ = part.count()
-        manifest = os.path.join(idx_dir, "manifest.json")
-        rebuild = True
-        if os.path.exists(manifest):
-            import json
-
-            from lucene_spark.util.blockcodec import CODEC_NAME
-
-            with open(manifest) as f:
-                m = json.load(f)
-            rebuild = m.get("doc_count") != np_ or m.get("codec") != CODEC_NAME
-        if rebuild:
-            build_index(spark, part, idx_dir, store_positions=True)
-        out.append(IndexSearcher(spark, idx_dir))
-    _searchers_sh[sf_dir] = out
-    return out
-
-
-_searchers_pay: dict[str, IndexSearcher] = {}
 
 # per-token integer payload: (doc_id * 31 + position) % 97 — closed form
 # both sides can synthesize (Spark annotates the text; the oracle
@@ -401,39 +118,108 @@ def _payload_docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def searcher_for_payloads(spark: SparkSession, sf_dir: str) -> IndexSearcher:
-    """Cached aux index built with tokenizer='whitespace' +
-    store_payloads=True (DelimitedPayloadTokenFilter + IntegerEncoder
-    analog) over the payload-annotated documents — kept apart from the
-    headline index so default benchmarks measure the StandardAnalyzer
-    positions-only configuration."""
-    if sf_dir in _searchers_pay:
-        return _searchers_pay[sf_dir]
-    idx_dir = _index_dir_for(sf_dir) + "_pay"
-    docs = _payload_docs_df(spark, sf_dir)
-    n = docs.count()
-    manifest = os.path.join(idx_dir, "manifest.json")
-    rebuild = True
-    if os.path.exists(manifest):
-        import json
+# analyzer chains of the aux indexes (kept apart from the headline index
+# so default benchmarks measure the StandardAnalyzer configuration)
+STEM_FILTERS = ("possessive", "porter")  # EnglishAnalyzer.java:43
+STEM_QUERY = ["querying", "merged"]  # surfaces; the index holds stems
+STOP_FILTERS = ("stop_en",)
+SHINGLE_FILTERS = ("shingle_2",)
+LEN_FILTERS = ("length_3_7",)
+REV_FILTERS = ("reverse",)
 
-        from lucene_spark.util.blockcodec import CODEC_NAME
 
-        with open(manifest) as f:
-            m = json.load(f)
-        rebuild = (
-            m.get("doc_count") != n
-            or m.get("codec") != CODEC_NAME
-            or not m.get("store_payloads")
+def _tree_digest(path: str, suffix: str = "") -> str:
+    """sha256 over ``path`` if it is a file, else over every file under
+    it ending in ``suffix``: each file's relative name and bytes, in
+    sorted path order."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        pattern = os.path.join(path, "**", "*" + suffix)
+        files = sorted(
+            p for p in glob.glob(pattern, recursive=True) if os.path.isfile(p)
         )
-    if rebuild:
-        build_index(
-            spark, docs, idx_dir, store_positions=True,
-            tokenizer="whitespace", store_payloads=True,
-        )
-    s = IndexSearcher(spark, idx_dir)
-    _searchers_pay[sf_dir] = s
-    return s
+    h = hashlib.sha256()
+    for p in files:
+        h.update(os.path.relpath(p, path).encode() + b"\0")
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
+def _package_digest() -> str:
+    """Digest of every .py under lucene_spark/: any change to the code
+    that builds or reads a cached artifact changes it."""
+    return _tree_digest(os.path.dirname(os.path.abspath(__file__)), ".py")
+
+
+def _cache_key(source: str, name: str, opts: dict) -> str:
+    """What a cached artifact was built from: the bytes of its source
+    parquet, the name of the function that shaped the input, the sorted
+    build options and the package source."""
+    h = hashlib.sha256()
+    for part in (
+        _tree_digest(source),
+        json.dumps([name, sorted(opts.items())]),
+        _package_digest(),
+    ):
+        h.update(part.encode() + b"\0")
+    return h.hexdigest()
+
+
+def _rebuild_if_stale(out_dir: str, key: str, build) -> bool:
+    """The one rule for when a cached artifact is rebuilt: unless
+    out_dir's key file holds ``key``, clear out_dir, run ``build()`` and
+    write the key file last, so a build killed midway leaves no key and
+    is redone by the next call. Returns whether it built."""
+    key_file = os.path.join(out_dir, KEY_FILE)
+    if os.path.exists(key_file):
+        with open(key_file) as f:
+            if f.read() == key:
+                return False
+    shutil.rmtree(out_dir, ignore_errors=True)
+    build()
+    with open(key_file, "w") as f:
+        f.write(key)
+    return True
+
+
+def _sf_cache_dir(sf_dir: str) -> str:
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    return os.path.join(BUILD_DIR, "gate_idx", tag)
+
+
+# index dir -> (key, searcher opened on it)
+_open: dict[str, tuple[str, IndexSearcher]] = {}
+
+
+def cached_index(
+    spark: SparkSession, sf_dir: str, docs=_docs_df, **build_opts
+) -> IndexSearcher:
+    """The gate index over ``docs(spark, sf_dir)``, built by
+    ``build_index(..., store_positions=True, **build_opts)`` into
+    BUILD_DIR/gate_idx/<sf tag>/<docs name>[-<opt>=<value>...] and
+    rebuilt whenever its _cache_key changes. A call whose key matches
+    the key file opens the index without a build, and a repeat call
+    returns the searcher already open without a Spark job."""
+    opts = {"store_positions": True, **build_opts}
+    name = docs.__name__
+    variant = "-".join(
+        [name.strip("_")]
+        + [
+            f"{k}={'+'.join(v) if isinstance(v, tuple) else v}"
+            for k, v in sorted(build_opts.items())
+        ]
+    )
+    idx_dir = os.path.join(_sf_cache_dir(sf_dir), variant)
+    key = _cache_key(os.path.join(sf_dir, "documents.parquet"), name, opts)
+    built = _rebuild_if_stale(
+        idx_dir, key,
+        lambda: build_index(spark, docs(spark, sf_dir), idx_dir, **opts),
+    )
+    if built or _open.get(idx_dir, ("",))[0] != key:
+        _open[idx_dir] = (key, IndexSearcher(spark, idx_dir))
+    return _open[idx_dir][1]
 
 
 def _docid_map(s: IndexSearcher) -> DataFrame:
@@ -506,7 +292,7 @@ def _bm25_spark(
     spark: SparkSession, sf_dir: str, terms: list[str], mode: str,
     k: int = 10, searcher: IndexSearcher | None = None,
 ) -> DataFrame:
-    s = searcher if searcher is not None else searcher_for(spark, sf_dir)
+    s = searcher if searcher is not None else cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl_exact = s.manifest["sum_total_term_freq"] / n
     tf = s.postings_tf(terms)
@@ -550,7 +336,7 @@ def _bm25_spark(
 def q_term_postings(spark, sf_dir):
     """Full inverted index decode: (doc_id, term, tf). Exercises docID
     assignment, analysis, inversion, and the block codec round-trip."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     dm = _docid_map(s)
     return (
         s.postings_tf()
@@ -560,21 +346,21 @@ def q_term_postings(spark, sf_dir):
 
 
 def q_term_stats(spark, sf_dir):
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.terms_table.select(
         "term", F.col("df").cast("long").alias("df"), F.col("cf").cast("long").alias("cf")
     )
 
 
 def q_doc_norms(spark, sf_dir):
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return _docid_map(s).select(
         "doc_id", F.col("dl").cast("long").alias("dl"), F.col("norm").cast("long").alias("norm")
     )
 
 
 def q_collection_stats(spark, sf_dir):
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     m = s.manifest
     return spark.createDataFrame(
         [
@@ -603,7 +389,7 @@ def q_bm25_top10_and(spark, sf_dir):
 
 def q_bool_and_docs(spark, sf_dir):
     """Conjunction (leapfrog analog): all doc_ids containing both terms."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     tf = s.postings_tf(TERMS_AND)
     dm = _docid_map(s)
     hits = (
@@ -617,13 +403,13 @@ def q_bool_and_docs(spark, sf_dir):
 
 
 def q_count_term(spark, sf_dir):
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return spark.createDataFrame([(s.count(TERM_1),)], "cnt long")
 
 
 def q_prefix_df(spark, sf_dir):
     """Multi-term (prefix) query term expansion via the term dictionary."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.terms_table.filter(F.col("term").startswith(PREFIX)).select(
         "term", F.col("df").cast("long").alias("df")
     )
@@ -633,12 +419,12 @@ def q_suggest_prefix(spark, sf_dir):
     """Completion suggester duel: top-10 dictionary terms under the
     prefix, ranked by df DESC then term ASC (suggest-module lookup with
     df as the weight)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.suggest(PREFIX, k=10)
 
 
 def q_top_cf_terms(spark, sf_dir):
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return (
         s.terms_table.orderBy(F.desc("cf"), F.asc("term"))
         .limit(20)
@@ -733,7 +519,7 @@ def q_bm25_msm2(spark, sf_dir):
 def q_bm25_must_not(spark, sf_dir):
     """MUST term + MUST_NOT term (ReqExclScorer): score only the required
     clause, exclude docs containing the prohibited term."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     excl = s.postings_tf([TERMS_AND[1]]).select("docID")
     base = (
         _bm25_spark_scored(spark, sf_dir, [TERM_1])
@@ -772,7 +558,7 @@ def q_fuzzy_expand(spark, sf_dir):
     levenshtein on survivors — engine.fuzzy_terms). Dueled against the
     oracle's UNPRUNED levenshtein scan: identical rows prove the
     pre-filters drop nothing."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.fuzzy_terms(FUZZY_TARGET, max_edits=2).select(
         "term", F.col("df").cast("long").alias("df")
     )
@@ -783,7 +569,7 @@ def q_regexp_df(spark, sf_dir):
     regexp_terms pushes the pattern's mandatory literal prefix ('get')
     as a startswith predicate into the sorted terms scan before RLIKE —
     the AutomatonTermsEnum common-prefix analog (RegexpQuery.java:215)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.regexp_terms("get[a-z]*[0-9]").select(
         "term", F.col("df").cast("long").alias("df")
     )
@@ -795,7 +581,9 @@ def q_term_offsets(spark, sf_dir):
     position + [start, end) character offsets in the original text,
     decoded from the offs_vb/olen_vb payloads. The oracle re-derives
     token boundaries character-by-character in SQL."""
-    s = searcher_for_offsets(spark, sf_dir)
+    s = cached_index(
+        spark, sf_dir, store_offsets=True, store_term_vectors=True
+    )
     dm = _docid_map(s)
     return (
         s.postings_offsets([TERM_1])
@@ -816,7 +604,7 @@ def q_bm25_explain(spark, sf_dir):
     """IndexSearcher.explain duel: per-(doc, matching-term) BM25 score
     decomposition (tf, df, dl, idf, tf_norm, contrib, doc total) for the
     OR query's top-10 docs, double precision end-to-end."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     dm = _docid_map(s)
     ex = s.explain(TERMS_OR, k=10, mode="or")
     return ex.join(F.broadcast(dm.select("docID", "doc_id")), "docID").select(
@@ -839,7 +627,9 @@ def q_highlight_top10(spark, sf_dir):
     Doc selection runs in double precision so the duel is exact; the
     oracle re-derives token boundaries character-by-character in SQL and
     replays the identical anchored-window rule."""
-    s = searcher_for_offsets(spark, sf_dir)
+    s = cached_index(
+        spark, sf_dir, store_offsets=True, store_term_vectors=True
+    )
     dm = _docid_map(s)
     top = _bm25_spark(spark, sf_dir, TERMS_OR, "or").select("doc_id")
     top_docs = dm.join(F.broadcast(top), "doc_id").select("docID")
@@ -867,7 +657,7 @@ def q_mlt_top10(spark, sf_dir):
     (tf >= 2, df >= 5, ranked tf * ClassicSimilarity-idf, top 25, ties
     score DESC term ASC), then double-precision BM25 OR top-10 over the
     selected terms. The oracle replays the identical selection in SQL."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     row = docs.filter(F.col("doc_id") == MLT_SEED_DOC).select("text").head()
     if row is None:  # tiny sf dirs (not dueled); keep the query runnable
@@ -879,7 +669,7 @@ def q_mlt_top10(spark, sf_dir):
 def q_sort_by_field(spark, sf_dir):
     """Sort-by-field (B23): docs matching TERM_1 ordered by the n_chars
     metadata column DESC, doc_id ASC, top 15 (SortField.LONG analog)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     dm = _docid_map(s)
     hits = (
@@ -896,7 +686,7 @@ def q_sort_by_field(spark, sf_dir):
 
 def q_term_range_df(spark, sf_dir):
     """TermRangeQuery: dictionary slice [lo, hi] (inclusive)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.terms_table.where(
         (F.col("term") >= RANGE_LO) & (F.col("term") <= RANGE_HI)
     ).select("term", F.col("df").cast("long").alias("df"))
@@ -905,7 +695,7 @@ def q_term_range_df(spark, sf_dir):
 def q_wildcard_count(spark, sf_dir):
     """WildcardQuery val*9: expand against the dictionary, count distinct
     matching docs (MultiTermQuery rewrite to a doc-set union)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     terms = s.expand_terms(like=f"{WILDCARD_PREFIX}%{WILDCARD_SUFFIX}")
     if not terms:
         return spark.createDataFrame([(0,)], "cnt long")
@@ -917,7 +707,7 @@ def q_synonym_top10(spark, sf_dir):
     """SynonymQuery({table, scan}): union of postings scored as ONE
     pseudo-term — tf = sum of tfs, df = |union of doc sets|
     (search/SynonymQuery.java:719)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     tf = (
@@ -951,7 +741,7 @@ def q_blended_top10(spark, sf_dir):
     DisjunctionMax with tie 0.01 (DISJUNCTION_MAX_REWRITE). SQL-dueled;
     the float32 engine path (search_blended) is rank-identity
     pytest-asserted."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     stats = s.term_stats(SYN_TERMS)
@@ -994,7 +784,7 @@ def q_facet_ranges(spark, sf_dir):
     counts of the n_chars metadata in 500-char ranges, last bucket
     open-ended — the numeric-range dimension facet_source's value
     facet doesn't cover."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     hits = s.postings_tf([TERM_1]).select("docID")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     dm = _docid_map(s)
@@ -1017,7 +807,7 @@ def q_facet_taxonomy(spark, sf_dir):
     subsumes it."""
     from lucene_spark.search.facets import taxonomy_counts
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     hits = s.postings_tf([TERM_1]).select("docID")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     dm = _docid_map(s)
@@ -1036,7 +826,7 @@ def q_spell_top5(spark, sf_dir):
     Dueled against DuckDB's built-in levenshtein over the UNPRUNED
     vocabulary — identical rows prove the engine's pushed pre-filters
     (length window + pigeonhole substrings) drop no candidate."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.suggest_similar(SPELL_TARGET, k=5, max_edits=2)
 
 
@@ -1051,7 +841,7 @@ def q_word_breaks(spark, sf_dir):
     both halves are dictionary terms, rank summed df DESC then left
     ASC. The oracle enumerates the identical splits with substring over
     the unpruned vocabulary."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.suggest_word_breaks(WORDBREAK_INPUT, k=5)
 
 
@@ -1063,7 +853,7 @@ def q_fuzzy_suggest(spark, sf_dir):
     prefix-window LEAST(levenshtein...) over the unpruned vocabulary,
     proving the engine's pushed pre-filters (nonFuzzyPrefix startswith
     + length floor) drop no candidate."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.suggest_fuzzy(FUZZY_SUGGEST_INPUT, k=10)
 
 
@@ -1093,7 +883,7 @@ def q_geo_distance_top10(spark, sf_dir):
     exact double haversine on both sides (search/geo.py)."""
     from lucene_spark.search.geo import nearest
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     dm = _docid_map(s)
     hits = (
         s.postings_tf([TERM_1]).select("docID")
@@ -1126,7 +916,9 @@ def q_term_vector_doc(spark, sf_dir):
     of one document — (term, tf, positions) — against a re-analysis of
     the raw text in SQL. Positions serialize as a comma-joined string so
     both engines hash one canonical scalar."""
-    s = searcher_for_offsets(spark, sf_dir)
+    s = cached_index(
+        spark, sf_dir, store_offsets=True, store_term_vectors=True
+    )
     dm = _docid_map(s)
     row = dm.filter(F.col("doc_id") == TV_DOC).select("docID").head()
     if row is None:  # tiny sf dirs
@@ -1146,7 +938,9 @@ def q_mlt_vector_top10(spark, sf_dir):
     then the same double-precision BM25 OR top-10. The oracle is the
     identical selection replayed from re-tokenized text — passing proves
     vector tf == analyzed tf end-to-end."""
-    s_off = searcher_for_offsets(spark, sf_dir)
+    s_off = cached_index(
+        spark, sf_dir, store_offsets=True, store_term_vectors=True
+    )
     dm = _docid_map(s_off)
     row = dm.filter(F.col("doc_id") == MLT_SEED_DOC).select("docID").head()
     if row is None:
@@ -1190,7 +984,10 @@ def q_payload_sum_top10(spark, sf_dir):
     Ties (only ~97*max_tf distinct sums exist) are broken by doc_id, so
     the docID-space engine result converts to doc_id BEFORE the final
     order/limit (gate tie-break convention, see CLAUDE.md)."""
-    s = searcher_for_payloads(spark, sf_dir)
+    s = cached_index(
+        spark, sf_dir, docs=_payload_docs_df,
+        tokenizer="whitespace", store_payloads=True,
+    )
     scored = s.payload_score(TERM_1, "sum", k=None)
     j = scored.join(_docid_map(s).select("docID", "doc_id"), "docID")
     return (
@@ -1213,7 +1010,7 @@ def q_block_join_top10(spark, sf_dir):
     matching children's BM25 OR-sum over TERMS_OR, in double precision
     (the float32 engine path `search_block_join` is rank-identity-tested
     in tests/test_block_join.py). Ties break by parent key ASC."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     child = (
         _bm25_spark_scored(spark, sf_dir, TERMS_OR)
         .groupBy("docID")
@@ -1251,7 +1048,7 @@ def q_block_join_child_top10(spark, sf_dir):
     engine path `search_block_join_children` is rank-identity-tested in
     tests/test_block_join.py. Top-10 by (score DESC, doc_id ASC) — ties
     inside one block break in doc_id space on both sides."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     child = (
         _bm25_spark_scored(spark, sf_dir, TERMS_OR)
         .groupBy("docID")
@@ -1315,7 +1112,7 @@ def q_drill_sideways(spark, sf_dir):
     directly (counts are exact integers, no float duel caveat): base
     query = OR over TERMS_OR, drill-downs lang=en AND source=src3; each
     dimension's counts are over base + the OTHER dimension's drill-down."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     out = s.drill_sideways(TERMS_OR, DS_DRILLS)
     # docmap 'repo' carries the documents.source column (see _docs_df)
     return out.select(
@@ -1346,7 +1143,7 @@ def q_knn_classify(spark, sf_dir):
     float32 classify_knn path uses. Ordered vote DESC, cls ASC."""
     from lucene_spark.search.classify import knn_vote
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     terms = s.mlt_terms(_seed_text(spark, sf_dir, MLT_SEED_DOC))
     topk = (
         _bm25_spark_scored(spark, sf_dir, terms)
@@ -1376,7 +1173,7 @@ def q_nb_classify(spark, sf_dir):
     DESC (== prob DESC), cls ASC."""
     from lucene_spark.search.classify import nb_classify
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     dm = _docid_map(s)
     labels = (
@@ -1407,7 +1204,7 @@ def q_stemmed_bm25_top10(spark, sf_dir):
     (search/stem_sql.py), so neither tokenstream shares code."""
     from lucene_spark.analysis.porter import porter_stem, possessive
 
-    s = searcher_for_stemmed(spark, sf_dir)
+    s = cached_index(spark, sf_dir, token_filters=STEM_FILTERS)
     terms = [porter_stem(possessive(t)) for t in STEM_QUERY]
     return _bm25_spark(spark, sf_dir, terms, "or", searcher=s)
 
@@ -1421,7 +1218,7 @@ def q_stop_bm25_top10(spark, sf_dir):
     replica over the aux _stop index; position-GAP semantics (dropped
     tokens keep their slot) are oracle-dueled in
     tests/test_stopfilter.py."""
-    s = searcher_for_stop(spark, sf_dir)
+    s = cached_index(spark, sf_dir, token_filters=STOP_FILTERS)
     return _bm25_spark(spark, sf_dir, TERMS_OR, "or", searcher=s)
 
 
@@ -1433,7 +1230,7 @@ def q_length_bm25_top10(spark, sf_dir):
     accounting. The SQL twin filters length(term) BETWEEN 3 AND 7;
     position-gap semantics are oracle-dueled in
     tests/test_lengthfilter.py."""
-    s = searcher_for_length(spark, sf_dir)
+    s = cached_index(spark, sf_dir, token_filters=LEN_FILTERS)
     return _bm25_spark(spark, sf_dir, TERMS_OR, "or", searcher=s)
 
 
@@ -1448,7 +1245,7 @@ def q_shingle_bm25_top10(spark, sf_dir):
     with a LEAD window over re-tokenized positions). Double replica
     over the aux _sh2 index; gram positions / phrase-field parse are
     pytest-covered in tests/test_shingle.py."""
-    s = searcher_for_shingle(spark, sf_dir)
+    s = cached_index(spark, sf_dir, token_filters=SHINGLE_FILTERS)
     return _bm25_spark(spark, sf_dir, SHINGLE_TERMS, "or", searcher=s)
 
 
@@ -1513,7 +1310,7 @@ def q_syngraph_top10(spark, sf_dir):
     (float32 path pytest-asserted in tests/test_syngraph.py)."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     slots = [[t] + SYN_GRAPH.get(t, []) for t in SYN_QUERY]
@@ -1600,7 +1397,7 @@ def q_dv_sort_top15(spark, sf_dir):
         update_numeric_docvalue,
     )
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     dm = _docid_map(s)
     vals = (
@@ -1630,7 +1427,7 @@ def q_dv_sort_top15(spark, sf_dir):
 def q_facet_source(spark, sf_dir):
     """FacetsCollector analog: among docs matching TERM_1, value counts of
     the `source` metadata column."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     hits = s.postings_tf([TERM_1]).select("docID")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     dm = _docid_map(s)
@@ -1676,7 +1473,7 @@ def q_search_after(spark, sf_dir):
 def _bm25_spark_scored(spark, sf_dir, terms: list[str]):
     """(docID, doc_id, term, s): per-(doc,term) double-precision BM25
     partial scores from the decoded index."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     stats = s.term_stats(terms)
@@ -1845,7 +1642,7 @@ def q_content_sha256(spark, sf_dir):
     the whole distributed build (docmap.content_sha256) must equal the
     digest of the source table's content — dueled against DuckDB hashing
     the raw parquet directly."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.docmap.select(
         F.col("path").cast("long").alias("doc_id"),
         F.lower(F.hex(F.col("content_sha256"))).alias("sha_hex"),
@@ -1863,18 +1660,14 @@ def q_ann_ivf_top10(spark, sf_dir):
 
     from lucene_spark.pipeline.ann import build_ivf_index, ivf_search
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    n = emb.count()
-    ivf_dir = os.path.join(_index_dir_for(sf_dir), "ivf")
-    meta_ok = False
-    cj = os.path.join(ivf_dir, "centroids.json")
-    if os.path.exists(cj):
-        import json
-
-        with open(cj) as f:
-            meta_ok = json.load(f)["meta"].get("count") == n
-    if not meta_ok:
-        build_ivf_index(spark, emb, ivf_dir, n_cells=16, kmeans_iters=3)
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    emb = spark.read.parquet(src)
+    ivf_dir = os.path.join(_sf_cache_dir(sf_dir), "ivf")
+    args = {"n_cells": 16, "kmeans_iters": 3}
+    _rebuild_if_stale(
+        ivf_dir, _cache_key(src, build_ivf_index.__name__, args),
+        lambda: build_ivf_index(spark, emb, ivf_dir, **args),
+    )
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     return ivf_search(
         spark, ivf_dir, np.asarray(qrow, dtype=np.float32), k=10,
@@ -1888,7 +1681,7 @@ def q_lucene_bm25_top10(spark, sf_dir):
     """The real Lucene-semantics path: float32 BM25 over byte4 norms with
     block-max pruning. Rank-identity is asserted against the numpy oracle
     in tests/test_e2e_spark.py; the driver records a rows-only check."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     dm = _docid_map(s)
     res = s.search(" ".join(TERMS_OR), k=10, mode="or", prune=True)
     return res.join(F.broadcast(dm.select("docID", "doc_id")), "docID").select(
@@ -1899,7 +1692,7 @@ def q_lucene_bm25_top10(spark, sf_dir):
 def q_sloppy_phrase_top10(spark, sf_dir):
     """Sloppy PhraseQuery (slop=2) — rows-only; rank-identity vs the
     numpy oracle is pytest-asserted."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     dm = _docid_map(s)
     res = s.search_sloppy_phrase(f"{TERMS_AND[0]} {TERMS_AND[1]}", slop=2, k=10)
     return res.join(F.broadcast(dm.select("docID", "doc_id")), "docID").select(
@@ -1935,7 +1728,7 @@ def q_phrase_top10(spark, sf_dir):
     pytest-asserted against the numpy oracle."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     t0, t1 = TERMS_AND[0], TERMS_AND[1]
@@ -1982,7 +1775,7 @@ def _span_freq_spark(spark, sf_dir, first_end=None, exclude=None):
     adjacency over index-decoded positions, double precision."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     t0, t1 = TERMS_AND[0], TERMS_AND[1]
     stats = s.term_stats([t0, t1])
     n = s.manifest["doc_count"]
@@ -2018,7 +1811,7 @@ def _span_freq_spark(spark, sf_dir, first_end=None, exclude=None):
 
 
 def _span_topk(spark, sf_dir, first_end=None, exclude=None):
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     avgdl = s.manifest["sum_total_term_freq"] / s.manifest["doc_count"]
     scored, w = _span_freq_spark(spark, sf_dir, first_end, exclude)
     scored = scored.withColumn(
@@ -2070,7 +1863,7 @@ def _span_near_chains(spark, sf_dir, slop: int):
     (NearSpansOrdered.stretchToOrder); matchWidth = p2-p1-1 <= slop;
     sf = 1/(1+matchWidth) (SpanScorer.setFreqCurrentDoc:112 — every
     chain is enumerated, not just minimal intervals)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     pos = s.postings_positions([SN_T1, SN_T2])
     c1 = pos.where(F.col("term") == SN_T1).select("docID", F.col("pos").alias("p1"))
     t2 = pos.where(F.col("term") == SN_T2).select("docID", F.col("pos").alias("tp"))
@@ -2086,7 +1879,7 @@ def _span_near_chains(spark, sf_dir, slop: int):
 
 
 def _span_near_score(spark, sf_dir, chains, weight: float):
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     avgdl = s.manifest["sum_total_term_freq"] / s.manifest["doc_count"]
     freq = chains.groupBy("docID").agg(F.sum("sf").alias("freq"))
     dm = _docid_map(s)
@@ -2127,7 +1920,7 @@ def q_span_near_top10(spark, sf_dir):
     termStates map) — double replica over index-decoded positions; the
     float32 engine path search_span_near is oracle-dueled in
     tests/test_r5_batch6.py."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     chains = _span_near_chains(spark, sf_dir, SN_SLOP)
     return _span_near_score(
         spark, sf_dir, chains, _idf_sum(s, [SN_T1, SN_T2])
@@ -2140,7 +1933,7 @@ def q_span_containing_top10(spark, sf_dir):
     those containing an SN_LITTLE occurrence in [p1, p2]; freq still
     counts big spans at their slop factor; weight sums BOTH sides' idf
     (SpanContainWeight.extractTermStates forwards big and little)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     chains = _span_near_chains(spark, sf_dir, SN_CONT_SLOP)
     lit = (
         s.postings_positions([SN_LITTLE])
@@ -2166,7 +1959,7 @@ def q_span_near_un_top10(spark, sf_dir):
     SN_SLOP, freq += 1/(1+width). Double replica over index-decoded
     positions; the float32 engine path (ordered=False) is dueled in
     tests/test_r5_batch6.py."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     pos = s.postings_positions([SN_T1, SN_T2])
     pa = pos.where(F.col("term") == SN_T1).select("docID", F.col("pos").alias("e"))
     pb = pos.where(F.col("term") == SN_T2).select("docID", F.col("pos").alias("p"))
@@ -2208,7 +2001,7 @@ def q_span_multi_top10(spark, sf_dir):
     replica over index-decoded positions; the float32 engine path
     (list clauses in search_span_near) is oracle-dueled in
     tests/test_r5_batch6.py."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     pos = s.postings_positions(list(SMT_ALTS) + [SMT_T2])
     c1 = pos.where(F.col("term").isin(*SMT_ALTS)).select(
         "docID", F.col("pos").alias("p1")
@@ -2254,7 +2047,7 @@ def q_complex_phrase_top10(spark, sf_dir):
     tests/test_complexphrase.py."""
     from lucene_spark.search.complexphrase import phrase_slots
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     slots = phrase_slots(s, CP_PHRASE)
     a1, a2, t3 = list(slots[0]), list(slots[1]), slots[2]
     all_terms = list(dict.fromkeys(a1 + a2 + [t3]))
@@ -2295,7 +2088,7 @@ def q_span_or_top10(spark, sf_dir):
     unlike the boolean OR (per-term saturation then sum). Double
     replica; the float32 engine path search_span_or is dueled in
     tests/test_r5_batch6.py."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     avgdl = s.manifest["sum_total_term_freq"] / s.manifest["doc_count"]
     w = _idf_sum(s, SPANOR_TERMS)
     freq = (
@@ -2336,7 +2129,7 @@ def q_simple_query_top10(spark, sf_dir):
     the float32 execute_simple path is dueled in tests/test_r5_batch6.py.
     The filt* expansion uses the engine's dictionary (top-df capped at
     1024; the corpus has a single filt- term so the cap is moot)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     filt = s.expand_terms(prefix="filt", top_terms=True)
     sc = _bm25_spark_scored(spark, sf_dir, ["value", "scan"] + filt)
     is_val = F.col("term") == "value"
@@ -2395,7 +2188,7 @@ def q_suffix_top10(spark, sf_dir):
     (the float32 path search_suffix is pytest-dueled). The DuckDB
     oracle expands the FORWARD vocabulary with LIKE '%er' — the two
     sides agree only if reversal round-trips the whole dictionary."""
-    s = searcher_for_reverse(spark, sf_dir)
+    s = cached_index(spark, sf_dir, token_filters=REV_FILTERS)
     terms = s.expand_terms(prefix=SUFFIX[::-1], top_terms=True)
     return _bm25_spark(spark, sf_dir, terms, "or", searcher=s)
 
@@ -2411,7 +2204,10 @@ def q_multi_shard_top10(spark, sf_dir):
     single-corpus BM25 SQL — sharding must be invisible. Double
     replica; the float32 engine path (search/multi.py) is pytest-dueled
     incl. docID/docBase arithmetic."""
-    shards = searchers_for_shards(spark, sf_dir)
+    shards = [
+        cached_index(spark, sf_dir, docs=half)
+        for half in (_lower_half_docs_df, _upper_half_docs_df)
+    ]
     n = sum(s.manifest["doc_count"] for s in shards)
     avgdl = sum(s.manifest["sum_total_term_freq"] for s in shards) / n
     dfg: dict[str, float] = {}
@@ -2477,7 +2273,7 @@ def q_phrase_wild_top10(spark, sf_dir):
     search_phrase_wildcard is pytest-dueled."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     exp0 = s.expand_terms(prefix=PW_PREFIX, top_terms=True)
     all_terms = sorted(exp0) + [PW_W2]
     n = s.manifest["doc_count"]
@@ -2529,7 +2325,7 @@ def q_common_terms_top10(spark, sf_dir):
     on the Spark side and from SQL dfs on the DuckDB side."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     stats = s.term_stats(CT_GATE_TERMS)
     cut = math.ceil(CT_MTF * s.manifest["doc_count"])
     low = [t for t in CT_GATE_TERMS if (stats[t].df if t in stats else 0) <= cut]
@@ -2600,7 +2396,7 @@ def q_multiphrase_top10(spark, sf_dir):
     (search_multi_phrase) is pytest-asserted vs the numpy oracle."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     all_terms = MP_SLOT0 + MP_SLOT1
@@ -2650,7 +2446,7 @@ def q_phrase_prefix_top10(spark, sf_dir):
     and is unit-tested for that composition."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     exp = s.expand_terms(prefix=PP_PREFIX, top_terms=True)
@@ -2695,7 +2491,7 @@ def q_interval_near_top10(spark, sf_dir):
     Chain each start to the first later occurrence of the next term; the
     end is monotone in the start, so minimal = last start per distinct
     end. Integer counts — exact across engines."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     pos = s.postings_positions([INTERVAL_T1, INTERVAL_T2])
     c1 = pos.where(F.col("term") == INTERVAL_T1).select(
         "docID", F.col("pos").alias("p1")
@@ -2732,7 +2528,7 @@ def q_interval_unordered_top10(spark, sf_dir):
     minimal window ending at position e is (largest opposite-list
     position < e, e); windows containing another candidate window are
     dropped; gap filter last. Integer counts — exact across engines."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     pos = s.postings_positions([INTERVAL_T1, INTERVAL_T2])
     pa = pos.where(F.col("term") == INTERVAL_T1).select(
         "docID", F.col("pos").alias("p")
@@ -2790,7 +2586,7 @@ def _sloppy2_scored(spark, sf_dir):
     1/(1+span) when span <= slop. That is plain join+min SQL."""
     import math
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     avgdl = s.manifest["sum_total_term_freq"] / n
     t0, t1 = TERMS_AND
@@ -2889,7 +2685,7 @@ def q_fuzzy_scored_top10(spark, sf_dir):
     over the pruned dictionary expansion (scoring-boolean rewrite of the
     parser's fuzzy leaf) — SQL-dueled against an unpruned levenshtein
     expansion, proving the pushed pre-filters drop nothing."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     terms = s.expand_fuzzy(FUZZY_TARGET, max_edits=2)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -2907,7 +2703,7 @@ def q_range_scored_top10(spark, sf_dir):
     """TermRangeQuery [scan TO table] scored: sum of per-term
     double-precision BM25 over the dictionary slice (the parser's range
     leaf execution) — SQL-dueled."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     terms = s.expand_terms(lo=RANGE_LO, hi=RANGE_HI, top_terms=True)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -2930,7 +2726,7 @@ def q_interval_before_top10(spark, sf_dir):
     engines; the engine kernel (search_intervals before=/after=/
     not_containing=) duels the per-doc oracle loops in
     tests/test_e2e_spark.py."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     pos = s.postings_positions([INTERVAL_T1, INTERVAL_T2, INTERVAL_INNER])
     c1 = pos.where(F.col("term") == INTERVAL_T1).select(
         "docID", F.col("pos").alias("p1")
@@ -2970,7 +2766,7 @@ def q_interval_containing_top10(spark, sf_dir):
     """Intervals.containing: minimal ordered key...table intervals
     (gaps <= 5) that hold at least one occurrence of 'row'. Integer
     counts — exact across engines."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     pos = s.postings_positions([INTERVAL_T1, INTERVAL_T2, INTERVAL_INNER])
     c1 = pos.where(F.col("term") == INTERVAL_T1).select(
         "docID", F.col("pos").alias("p1")
@@ -3019,7 +2815,7 @@ def q_combined_field_top10(spark, sf_dir):
     (search_combined_field) is pytest-asserted vs the numpy oracle.
     Weighted lengths are integer-valued so the avgdl sum is exact in
     both engines."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     n = s.manifest["doc_count"]
     stats = s.term_stats(TERMS_OR)
     tl = F.lit(CF_TITLE_LEN)
@@ -3089,7 +2885,7 @@ def q_suggest_infix(spark, sf_dir):
     """Infix suggester duel (AnalyzingInfixSuggester.java:82): top-10
     dictionary terms CONTAINING the fragment, ranked df DESC, term ASC —
     proves contains-filtered terms-table lookups against a LIKE oracle."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     return s.suggest_infix(INFIX, k=10)
 
 
@@ -3204,7 +3000,7 @@ def q_term_set(spark, sf_dir):
     absent member must contribute nothing. The cut happens in doc_id
     space (docID rank is (source, doc_id), so a docID-space limit would
     pick a different — equally valid — row set than the oracle's)."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     out = s.search_term_set(TERM_SET, k=None)
     dm = _docid_map(s)
     return (
@@ -3229,7 +3025,7 @@ def q_sampled_facets(spark, sf_dir):
     oracle derives by counting distinct matching doc_ids."""
     from lucene_spark.search.facets import sampled_facet_counts
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     stats = s.term_stats([TERM_1])
     total = int(stats[TERM_1].df) if TERM_1 in stats else 0
     hits = s.postings_tf([TERM_1]).select("docID").distinct()
@@ -3260,7 +3056,7 @@ def q_expr_sort_top10(spark, sf_dir):
     match set (real postings decode) ranked by EXPR_SORT_SOURCE over
     per-doc values instead of relevance — the expressions module's sort
     surface; the same AST renders the DuckDB ORDER BY."""
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     hits = s.filter_docs(TERM_1)
     dm = _docid_map(s)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -3288,7 +3084,7 @@ def q_facet_assoc_sum(spark, sf_dir):
     just counts. Runs through the real postings decode for the match set."""
     from lucene_spark.search.facets import association_sum
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     dm = _docid_map(s)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     j = (
@@ -3378,7 +3174,7 @@ def _similarity_gate(spark, sf_dir, terms, sim, **kw):
     (gate convention), top 10."""
     from lucene_spark.search.similarity import similarity_scores
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     sc = similarity_scores(s, terms, sim=sim, **kw)
     agg = sc.groupBy("docID").agg(F.sum("s").alias("v"))
     j = agg.join(F.broadcast(_docid_map(s).select("docID", "doc_id")), "docID")
@@ -3491,7 +3287,7 @@ def q_dv_stats(spark, sf_dir):
     by count)."""
     from lucene_spark.search.facets import numeric_docvalues_stats
 
-    s = searcher_for(spark, sf_dir)
+    s = cached_index(spark, sf_dir)
     dm = _docid_map(s)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     j = (

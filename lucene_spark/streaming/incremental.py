@@ -34,8 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.util.blockcodec import decode_block as decode
-from lucene_spark.util.blockcodec import encode_block as encode
+from lucene_spark.util.blockcodec import shift_doc_blocks
 
 from lucene_spark.index.builder import (
     BLOCK_SCHEMA,
@@ -994,13 +993,8 @@ def add_indexes(
 
     def _shift(batches):
         for pdf in batches:
-            shifted = []
-            for blob in pdf["docs_vb"]:
-                gaps = decode(bytes(blob))
-                gaps[0] += offset  # delta chain keeps its raw first value
-                shifted.append(bytes(encode(gaps)))
             yield pdf.assign(
-                docs_vb=shifted,
+                docs_vb=shift_doc_blocks(pdf["docs_vb"], offset),
                 min_doc=pdf["min_doc"] + offset,
                 max_doc=pdf["max_doc"] + offset,
             )

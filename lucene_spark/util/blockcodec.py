@@ -129,6 +129,16 @@ def runs_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return cs - np.repeat(before, counts)
 
 
+def shift_doc_blocks(docs_vb, offset: int) -> list[bytes]:
+    """docs_vb payloads with every docID raised by ``offset``, in one
+    decode and one encode over the whole batch. Each payload's delta
+    chain starts from its absolute first docID, so only that first gap
+    moves; byte-identical to re-encoding each payload on its own."""
+    gaps, counts = decode_blocks(docs_vb)
+    gaps[(np.cumsum(counts) - counts)[counts > 0]] += offset
+    return encode_blocks(gaps, counts)
+
+
 # -- postings rows ----------------------------------------------------------
 #
 # A postings row (a 256-doc block, or a run before the merge) holds

@@ -11,7 +11,7 @@ Cluster usage (the north-rule deployment shape):
 Sandbox usage (local[N], used by scripts/scaling_bench.py):
 
     python scripts/build_index_job.py --cpus 8 --gen-docs 20000 \
-        --out /root/repo/.build/scale_8
+        --out .build/scale_8
 
 Prints one JSON line with the build manifest (docs/sec, wall seconds).
 """

@@ -31,7 +31,7 @@ def main() -> None:
 
     spark = get_spark(16, app_name="plan_evidence")
     spark.sparkContext.setLogLevel("ERROR")
-    s = gate.searcher_for(spark, SF)
+    s = gate.cached_index(spark, SF)
 
     sections: list[tuple[str, str, str]] = []
 
@@ -96,7 +96,9 @@ def main() -> None:
     ))
     assert "Exchange" not in p, "minhash signature plan grew a shuffle!"
 
-    s_off = gate.searcher_for_offsets(spark, SF)
+    s_off = gate.cached_index(
+        spark, SF, store_offsets=True, store_term_vectors=True
+    )
     hl = s_off.highlight(
         ["table", "scan", "spark"],
         docs_df=gate._docs_df(spark, SF),

@@ -13,7 +13,7 @@
 #
 # Touch .build/BENCH_PAUSE to suspend (e.g. while pytest owns the CPUs).
 set -u
-REPO=/root/repo
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
 LOG=$REPO/.build/quiet_hunter.log
 mkdir -p $REPO/.build
 while true; do

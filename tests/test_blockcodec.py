@@ -11,7 +11,9 @@ from lucene_spark.util.blockcodec import (
     decode_blocks,
     encode_block,
     encode_blocks,
+    shift_doc_blocks,
 )
+from lucene_spark.util.varbyte import delta_encode
 from lucene_spark.util.varbyte import encode as leb_encode
 
 
@@ -48,6 +50,23 @@ def test_random_roundtrip(batched, seed):
     flat, got_counts = decode_blocks(enc)
     assert (got_counts == counts).all()
     assert (flat == np.concatenate(arrays)).all()
+
+
+@pytest.mark.parametrize("offset", [0, 1, 127, 1 << 40])
+def test_shift_doc_blocks_matches_per_row(offset):
+    """add_indexes' docID rebase over a batch of 1-, 2- and 256-doc
+    blocks equals re-encoding each block with its first gap raised."""
+    rng = np.random.default_rng(offset % 97)
+    blocks = []
+    for n in (1, 2, 256, 1, 256, 2):
+        docs = np.sort(rng.choice(1 << 20, n, replace=False))
+        blocks.append(encode_block(delta_encode(docs)))
+    want = []
+    for b in blocks:
+        gaps = decode_block(b)
+        gaps[0] += offset
+        want.append(encode_block(gaps))
+    assert shift_doc_blocks(blocks, offset) == want
 
 
 def test_vbyte_mode_emits_leb_header():
